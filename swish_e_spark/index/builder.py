@@ -43,6 +43,7 @@ import shutil
 import time
 import zlib
 from dataclasses import asdict, dataclass
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -1020,6 +1021,7 @@ class IndexHandle:
             raise ValueError(f"index at {out_dir} is incomplete")
         self.cfg = IndexConfig(**self.meta["config"])
         self._stats = None
+        self._resident = None
         st = os.stat(self._manifest_path)
         self._manifest_sig = (st.st_mtime_ns, st.st_size)
 
@@ -1139,6 +1141,165 @@ class IndexHandle:
                                  + (row["extra"] or 0)),
             }
         return self._stats
+
+    def _listed_files(self, sub: str) -> list:
+        """(path, {partition column: value}) of every parquet part file
+        of a data table, resolved through the manifest exactly as
+        ``_read_listed`` resolves it for Spark: listed dirs are walked,
+        listed files taken as-is, ``_``/``.``-prefixed names (commit
+        markers, checksums) skipped, and ``key=value`` path segments
+        below the table root become partition values."""
+        root = os.path.join(self.out_dir, sub)
+        listed = (self.meta.get("files") or {}).get(sub)
+        if listed is None:  # pre-snapshot manifest: the whole root
+            listed = [sub] if os.path.isdir(root) else []
+        out = []
+        for rel in listed:
+            path = os.path.join(self.out_dir, rel)
+            if os.path.isfile(path):
+                walk = [(os.path.dirname(path), [],
+                         [os.path.basename(path)])]
+            elif os.path.isdir(path):
+                walk = os.walk(path)
+            else:
+                raise FileNotFoundError(path)
+            for dp, dirs, names in walk:
+                dirs[:] = sorted(d for d in dirs
+                                 if not d.startswith(("_", ".")))
+                for name in sorted(names):
+                    if name.startswith(("_", ".")):
+                        continue
+                    full = os.path.join(dp, name)
+                    segs = os.path.relpath(full, root).split(os.sep)[:-1]
+                    out.append((full, dict(s.split("=", 1)
+                                           for s in segs if "=" in s)))
+        return out
+
+    def resident(self, max_bytes: int):
+        """Driver-memory view of this handle (``ResidentIndex``), or
+        None when the on-disk segment files exceed ``max_bytes``.
+        Opening it reads only the docs and tombstone tables and sets
+        ``stats`` from them with the same formulas as the Spark job, so
+        a resident handle runs no Spark job at all; the segment chunks
+        load on first use. Opened once per handle and shared by its
+        engines. A stale handle raises as in ``ensure_current``."""
+        self.ensure_current()
+        if self._resident is None:
+            seg_files = self._listed_files("segments")
+            disk_bytes = sum(os.path.getsize(p) for p, _ in seg_files)
+            if disk_bytes > max_bytes:
+                return None
+            self._resident = self._open_resident(seg_files, disk_bytes)
+        return self._resident if self._resident.disk_bytes <= max_bytes \
+            else None
+
+    def _open_resident(self, seg_files, disk_bytes: int):
+        import pyarrow.compute as pc
+
+        def ints(tables, col):
+            """int64 column over all files; null or absent reads 0."""
+            parts = [pc.fill_null(t.column(col), 0).to_numpy().astype(
+                         np.int64) if col in t.column_names
+                     else np.zeros(t.num_rows, dtype=np.int64)
+                     for t, _ in tables]
+            return np.concatenate(parts) if parts else \
+                np.zeros(0, dtype=np.int64)
+
+        docs = _read_parquet(self._listed_files("docs"),
+                             ["doc_id", "doc_len", "extra_pos"])
+        removed = np.unique(ints(_read_parquet(
+            self._listed_files("removed"), ["doc_id"]), "doc_id"))
+        doc_ids = ints(docs, "doc_id")
+        doc_len = ints(docs, "doc_len")
+        extra = ints(docs, "extra_pos")
+        if len(removed):
+            live = ~np.isin(doc_ids, removed)
+            doc_len, extra = doc_len[live], extra[live]
+        if self._stats is None:
+            n = len(doc_len)
+            total_len = int(doc_len.sum())
+            self._stats = {
+                "n_docs": n,
+                "avgdl": float(total_len / n) if n else 0.0,
+                "total_len": total_len,
+                "total_pos": total_len + int(extra.sum()),
+            }
+        return ResidentIndex(seg_files, self.shard_bases, removed,
+                             disk_bytes)
+
+
+def _read_parquet(files, cols):
+    """[(Arrow table of ``cols`` present in the file, partition values)]
+    for ``_listed_files`` output."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for path, parts in files:
+        pf = pq.ParquetFile(path)
+        names = pf.schema_arrow.names
+        out.append((pf.read(columns=[c for c in cols if c in names]),
+                    parts))
+    return out
+
+
+RESIDENT_CHUNK_COLS = ["field", "term", "docs_bin", "tfs_bin", "dls_bin",
+                       "pos_bin", "structs_bin"]
+
+
+class ResidentIndex:
+    """One handle's posting chunks held in driver memory as Arrow, for
+    in-process queries (the reference opens its index once per handle,
+    src/db_native.c).
+
+    ``chunks``: one row per segment chunk — field, term, the five
+    posting binaries and ``base`` (the chunk's shard rebase offset).
+    ``rows``: (field, term) -> chunk row indices. ``terms``: field ->
+    sorted terms, for prefix and pattern expansion. These three load
+    on first use. ``removed``: sorted tombstoned doc ids.
+    ``disk_bytes``: size of the segment files."""
+
+    def __init__(self, seg_files, bases: dict, removed: np.ndarray,
+                 disk_bytes: int):
+        self._seg_files = seg_files
+        self._bases = bases
+        self.removed = removed
+        self.disk_bytes = disk_bytes
+
+    @cached_property
+    def chunks(self):
+        import pyarrow as pa
+
+        tables = []
+        for t, parts in _read_parquet(self._seg_files, RESIDENT_CHUNK_COLS):
+            base = self._bases.get(int(parts.get("shard", 0)), 0)
+            tables.append(t.select(RESIDENT_CHUNK_COLS).append_column(
+                "base", pa.array(np.full(t.num_rows, base,
+                                         dtype=np.int64))))
+        if tables:
+            # one contiguous array per column: take() over a table of
+            # per-file chunks costs milliseconds per query
+            return pa.concat_tables(tables).combine_chunks()
+        return pa.table(
+            {c: pa.array([], pa.string() if c in ("field", "term")
+                         else pa.binary())
+             for c in RESIDENT_CHUNK_COLS}
+            | {"base": pa.array([], pa.int64())})
+
+    @cached_property
+    def rows(self) -> dict:
+        rows: dict = {}
+        for i, key in enumerate(zip(
+                self.chunks.column("field").to_pylist(),
+                self.chunks.column("term").to_pylist())):
+            rows.setdefault(key, []).append(i)
+        return rows
+
+    @cached_property
+    def terms(self) -> dict:
+        by_field: dict = {}
+        for field, term in self.rows:
+            by_field.setdefault(field, []).append(term)
+        return {f: sorted(ts) for f, ts in by_field.items()}
 
 
 def generate_pages_df(spark, n_docs: int, partitions: int = 32):

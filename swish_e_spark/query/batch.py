@@ -325,13 +325,26 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, trigger, k):
             if e is not None:
                 cand[e[0]] = True
         ast_by_id = dict(pos_asts)
-        sub = df[cand[doc_codes]]
-        for doc_id, g in sub.groupby("doc_id", sort=False):
-            entries = {}
-            for f, t, tfv, pos in zip(g["field"], g["term"], g["tf"],
-                                      g["positions"]):
-                entries[(f, t)] = (int(tfv), pos)
-            dlv = int(g["dl"].iloc[0])
+        # candidate rows grouped by doc with one stable argsort, then
+        # per-doc slices read from plain column lists (pandas per-group
+        # indexing cost several times the evaluation itself)
+        at = np.flatnonzero(cand[doc_codes])
+        at = at[np.argsort(doc_codes[at], kind="stable")]
+        at_codes = doc_codes[at]
+        bounds = np.flatnonzero(np.r_[True, at_codes[1:] != at_codes[:-1],
+                                      True]) if len(at) else [0]
+        fields = df["field"].tolist()
+        terms = df["term"].tolist()
+        tfs = df["tf"].tolist()
+        dls = df["dl"].tolist()
+        poss = df["positions"].tolist()
+        doc_list = np.asarray(doc_vals).tolist()
+        for s0, e0 in zip(bounds[:-1], bounds[1:]):
+            g = at[s0:e0].tolist()
+            doc_id = doc_list[at_codes[s0]]
+            entries = {(fields[i], terms[i]): (int(tfs[i]), poss[i])
+                       for i in g}
+            dlv = int(dls[g[0]])
             cands: set = set()
             for ekey in entries:
                 cands.update(pos_trigger.get(ekey, ()))

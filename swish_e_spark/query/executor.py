@@ -1,7 +1,24 @@
-"""Distributed query engine over the segment tables.
+"""Query engine over the segment tables: resident and distributed.
 
-The Spark rebuild of swish-e's search path (SURVEY.md §3.2): the driver
-compiles the query (shared compiler, query/parser.py), plans a
+Resident path. When the manifest-listed segment files of an index fit
+``SparkQueryEngine.RESIDENT_MAX_BYTES`` (240 MiB on disk), opening an
+engine reads the docs stats and the tombstones into driver memory, and
+the first ``search()`` that can use the segment chunks loads them as
+Arrow (``IndexHandle.resident``), as the reference opens its index
+once per handle (reference src/db_native.c).
+``search()`` then runs no Spark job: the leaves' chunk rows are looked
+up in a (field, term) dictionary (prefixes and patterns expand over a
+sorted per-field term list), decoded by ``_decode_kernel`` (structure
+mask included), stripped of tombstoned docs, and scored by the
+``search_batch`` kernel (query/batch.py) as a single partition. WAND,
+the chunk pruner, the allowlist and the θ/dictionary/df caches below
+are not used on this path. ``search()`` with property ``limits`` or a
+unary NOT, every ``search()`` on an over-budget index, and
+``search_df``/``match_df``/``search_batch`` always take the Spark path;
+``last_search_path`` records which one ran.
+
+Spark path. The rebuild of swish-e's search path (SURVEY.md §3.2): the
+driver compiles the query (shared compiler, query/parser.py), plans a
 partition-pruned scan of the segment chunks for the needed terms, decodes
 postings in an Arrow-batched kernel, and evaluates the boolean algebra as
 DataFrame operations:
@@ -76,7 +93,10 @@ def _decode_kernel(batches, need_positions: bool, structure_mask,
     from ..codec.postings import unpack_posting_list
 
     for pdf in batches:
-        frames = []
+        # per-column parts, assembled into ONE frame per batch: a
+        # pd.concat of per-chunk frames re-checks every None of the
+        # object columns and cost more than the decode itself
+        keys, counts, ids, tfl, dll, posl, stl = [], [], [], [], [], [], []
         for rec in pdf.to_dict("records"):
             doc_ids, tfs, positions, structs, dls = unpack_posting_list(
                 rec["docs_bin"], rec["tfs_bin"],
@@ -123,26 +143,29 @@ def _decode_kernel(batches, need_positions: bool, structure_mask,
             else:
                 tfs_for_split = tfs
             n = len(doc_ids)
-            frame = {
-                "field": np.repeat(rec["field"], n),
-                "term": np.repeat(rec["term"], n),
-                "doc_id": doc_ids, "tf": tfs_for_split, "dl": dls,
-            }
+            keys.append((rec["field"], rec["term"]))
+            counts.append(n)
+            ids.append(doc_ids)
+            tfl.append(tfs_for_split)
+            dll.append(dls)
             split_at = np.cumsum(tfs_for_split)[:-1]
             if need_positions and positions is not None:
-                frame["positions"] = [
-                    a.astype("int32") for a in
-                    np.split(positions, split_at)]
+                posl.extend(np.split(positions.astype(np.int32), split_at))
             else:
-                frame["positions"] = [None] * n
+                posl.extend([None] * n)
             if need_structs and structs is not None:
-                frame["structs"] = [a.tobytes() for a in
-                                    np.split(structs, split_at)]
+                stl.extend(a.tobytes() for a in np.split(structs, split_at))
             else:
-                frame["structs"] = [None] * n
-            frames.append(pd.DataFrame(frame))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+                stl.extend([None] * n)
+        if keys:
+            yield pd.DataFrame({
+                "field": np.repeat(np.array([f for f, _ in keys],
+                                            dtype=object), counts),
+                "term": np.repeat(np.array([t for _, t in keys],
+                                           dtype=object), counts),
+                "doc_id": np.concatenate(ids), "tf": np.concatenate(tfl),
+                "dl": np.concatenate(dll), "positions": posl,
+                "structs": stl})
 
 
 def _wand_block_kernel(batches, prune: dict, theta: float,
@@ -255,6 +278,27 @@ def _needs_positions(node) -> bool:
     return False
 
 
+def _expand_sorted(terms: list, node) -> list:
+    """Terms of one field's sorted vocabulary matching a Prefix or
+    Pattern node: a bisect to the literal prefix's range, then (for
+    patterns) the same anchored regex ``_eval`` applies."""
+    from bisect import bisect_left
+
+    pre = node.prefix if isinstance(node, Prefix) \
+        else node.literal_prefix()
+    out = []
+    for t in terms[bisect_left(terms, pre):]:
+        if not t.startswith(pre):
+            break
+        out.append(t)
+    if isinstance(node, Pattern):
+        import re
+
+        rx = re.compile(node.regex())
+        out = [t for t in out if rx.fullmatch(t)]
+    return out
+
+
 def _wand_leaves(node):
     """(scoring_leaves, aux_leaves) for a WAND-eligible tree, else None.
 
@@ -344,6 +388,16 @@ class SparkQueryEngine:
         self._rare_docs_cache: dict = {}
         self.exh_prune_min_docs = self.EXH_PRUNE_MIN_DOCS
         self.last_exh_stats = None  # exhaustive-path pruning evidence
+        self.last_search_path = None  # "resident" or "spark"
+        self._resident = handle.resident(self.RESIDENT_MAX_BYTES)
+
+    # on-disk segment bytes up to which search() is answered in-process.
+    # Set at the largest index measured (546k docs, 237 MiB of segments;
+    # 4 cores, 2 GB driver heap): there every query family was still
+    # faster resident than on Spark, phrase and NEAR least (1.4-2.2 s
+    # against 2.4-3.2 s), and the copy cost the Python driver ~460 MB
+    # of RSS (peak ~860 MB while loading).
+    RESIDENT_MAX_BYTES = 240 << 20
 
     PREFIX_EXPAND_CAP = 5000  # max terms a wildcard may expand to via
                               # the terms table before falling back to a
@@ -1525,7 +1579,21 @@ class SparkQueryEngine:
 
     def search(self, q: str, k: int = 10, structure_mask=None,
                limits: dict | None = None):
-        """Top-k as [(doc_id, score)] — the oracle-comparable surface."""
+        """Top-k as [(doc_id, score)] — the oracle-comparable surface.
+
+        Answered in-process from the resident copy of the index when
+        the engine holds one and the query has no property limits and
+        no unary NOT; otherwise through the Spark plan of
+        ``search_df``. ``last_search_path`` records which ran."""
+        from .batch import _has_not
+
+        self.handle.ensure_current()  # stale caches must error, not lie
+        node = parse_query(q, self.cfg, phrase_delim=self.phrase_delim)
+        if self._resident is not None and not limits \
+                and not _has_not(node):
+            self.last_search_path = "resident"
+            return self._search_resident(node, k, structure_mask)
+        self.last_search_path = "spark"
         if k >= 1 << 20:
             # huge k = "all matches": avoid TakeOrdered's per-task O(k)
             # buffer AND driver-side sorting — the range-partitioned
@@ -1542,6 +1610,60 @@ class SparkQueryEngine:
                     for r in islice(df.toLocalIterator(), k)]
         rows = self.search_df(q, k, structure_mask, limits).collect()
         return [(r["doc_id"], r["score"]) for r in rows]
+
+    def _search_resident(self, node, k: int, structure_mask):
+        """Top-k of a parsed query from the resident index, with no
+        Spark job: look up the leaves' chunk rows, decode them with
+        ``_decode_kernel`` (structure mask applied there), drop
+        tombstoned docs, take df from the decoded counts (as
+        ``_term_stats`` does when tombstones or a mask change df) and
+        score with the batch kernel as a single partition, whose output
+        is already in (score desc, doc_id asc) order."""
+        import numpy as np
+
+        from .batch import (
+            _batch_kernel, _collect_expandables, _expansion_key,
+            _query_leaves,
+        )
+
+        res = self._resident
+        self.last_exh_stats = None
+        expansions = {}
+        wild: list = []
+        _collect_expandables(node, wild)
+        for nd in wild:
+            expansions[_expansion_key(nd)] = _expand_sorted(
+                res.terms.get(nd.field, []), nd)
+        rows = [res.rows[leaf]
+                for leaf in sorted(_query_leaves(node, expansions))
+                if leaf in res.rows]
+        if not rows:
+            return []
+        need_pos = _needs_positions(node)
+        cols = ["field", "term", "base", "docs_bin", "tfs_bin", "dls_bin"]
+        if need_pos or structure_mask is not None:
+            cols.append("pos_bin")
+        if structure_mask is not None:
+            cols.append("structs_bin")
+        chunks = res.chunks.take(np.concatenate(rows)).select(cols)
+        decoded = next(_decode_kernel([chunks.to_pandas()], need_pos,
+                                      structure_mask), None)
+        if decoded is None:
+            return []
+        if len(res.removed):
+            decoded = decoded[~np.isin(decoded["doc_id"].to_numpy(),
+                                       res.removed)]
+        stats = self.handle.stats
+        idf = {key: bm25_idf(stats["n_docs"], int(df)) for key, df in
+               decoded.groupby(["field", "term"], sort=False).size()
+               .items()}
+        out = next(_batch_kernel([decoded], [("q", node)], idf,
+                                 stats["avgdl"], expansions, None, k),
+                   None)
+        if out is None:
+            return []
+        return [(int(d), float(s))
+                for d, s in zip(out["doc_id"], out["score"])]
 
     def search_batch(self, queries, k: int = 10):
         """Top-k of N queries in ONE shared pipeline (query/batch.py):

@@ -98,6 +98,11 @@ class TestFuzzRankIdentity:
                 got = eng.search(q, k=10)
                 assert [(d, round(s, 6)) for d, s in got] == \
                     [(d, round(s, 6)) for d, s in want], q
+                # the exhaustive planner with the allowlist forced on
+                exh = eng.search_df(q, 10, wand="off").collect()
+                assert [(r["doc_id"], round(r["score"], 6))
+                        for r in exh] == \
+                    [(d, round(s, 6)) for d, s in want], q
                 # WAND surface: small planner on even iterations, the
                 # distributed planner on odd ones (ineligible trees
                 # fall back to the same exhaustive+allowlist path)

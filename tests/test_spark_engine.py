@@ -152,7 +152,8 @@ class TestExhaustivePruning:
         engine.exh_prune_min_docs = 0
         try:
             expected = oracle300.query(q, k=10)
-            got = engine.search(q, k=10)
+            got = [(r["doc_id"], r["score"]) for r in
+                   engine.search_df(q, 10, wand="off").collect()]
         finally:
             engine.exh_prune_min_docs = engine.EXH_PRUNE_MIN_DOCS
         assert [d for d, _ in got] == [d for d, _ in expected], q
@@ -165,7 +166,9 @@ class TestExhaustivePruning:
         before decode, and the match set must not change."""
         engine.exh_prune_min_docs = 0
         try:
-            got = engine.search("tailterm0 NEAR5 common0", k=10**6)
+            got = [(r["doc_id"], r["score"]) for r in
+                   engine.search_df("tailterm0 NEAR5 common0", 10**6,
+                                    wand="off").collect()]
             stats = engine.last_exh_stats
         finally:
             engine.exh_prune_min_docs = engine.EXH_PRUNE_MIN_DOCS
@@ -178,7 +181,7 @@ class TestExhaustivePruning:
     def test_gate_off_below_min_docs(self, engine):
         """Default gate: tiny index (300 docs) never pays the metadata
         planning job."""
-        engine.search("pigs AND wolf", k=5)
+        engine.search_df("pigs AND wolf", 5, wand="off").collect()
         assert engine.last_exh_stats is None
 
 
