@@ -1214,7 +1214,8 @@ class IndexHandle:
         extra = ints(docs, "extra_pos")
         if len(removed):
             live = ~np.isin(doc_ids, removed)
-            doc_len, extra = doc_len[live], extra[live]
+            doc_ids, doc_len, extra = \
+                doc_ids[live], doc_len[live], extra[live]
         if self._stats is None:
             n = len(doc_len)
             total_len = int(doc_len.sum())
@@ -1225,7 +1226,7 @@ class IndexHandle:
                 "total_pos": total_len + int(extra.sum()),
             }
         return ResidentIndex(seg_files, self.shard_bases, removed,
-                             disk_bytes)
+                             doc_ids, doc_len, disk_bytes)
 
 
 def _read_parquet(files, cols):
@@ -1255,14 +1256,18 @@ class ResidentIndex:
     posting binaries and ``base`` (the chunk's shard rebase offset).
     ``rows``: (field, term) -> chunk row indices. ``terms``: field ->
     sorted terms, for prefix and pattern expansion. These three load
-    on first use. ``removed``: sorted tombstoned doc ids.
-    ``disk_bytes``: size of the segment files."""
+    on first use. ``removed``: sorted tombstoned doc ids. ``doc_ids``,
+    ``doc_len``: the live docs and their lengths, which unary NOT
+    evaluates over. ``disk_bytes``: size of the segment files."""
 
     def __init__(self, seg_files, bases: dict, removed: np.ndarray,
+                 doc_ids: np.ndarray, doc_len: np.ndarray,
                  disk_bytes: int):
         self._seg_files = seg_files
         self._bases = bases
         self.removed = removed
+        self.doc_ids = doc_ids
+        self.doc_len = doc_len
         self.disk_bytes = disk_bytes
 
     @cached_property

@@ -1,30 +1,36 @@
-"""Batch query execution: score N queries in ONE shared Spark pipeline.
+"""The query evaluator: one kernel behind every engine path.
 
-Training-data pipelines run thousands of probe queries; at local[32]
-the per-job floor (~0.5-1.2 s) makes sequential ``engine.search()``
-latency-bound, not decode-bound, and on a real cluster the scheduler
-round-trips dominate the same way. The batch path amortizes everything
-that is per-query fixed cost:
+Every Spark-side evaluation (``search_batch``, the exhaustive
+``search_df``, ``match_df`` and the evaluation step of both WAND
+planners) runs ``evaluate``/``score_decoded`` below, and the resident
+``search()`` calls the same ``_batch_kernel`` as a single partition.
+The Spark shape amortizes the per-query fixed cost over a battery:
 
 1. ONE partition-pruned segment scan covering the union of every
    query's leaves (terms + expanded prefixes/patterns),
 2. ONE decode pass (positions only if some query is positional),
 3. ONE shuffle co-locating each doc's leaf rows,
 4. a per-partition evaluation kernel: non-positional queries (Term /
-   Prefix / Pattern / AND / OR / AND-NOT) evaluate as numpy column
-   arithmetic over factorized (doc, leaf) codes — zero Python per doc;
-   queries with phrase/NEAR nodes fall back to a per-doc AST walk (the
-   DAAT loop of the reference, /root/reference/src/search.c:2249-2637)
-   restricted to the docs that contain at least one of their leaves,
-5. per-partition top-k, then one tiny per-query merge.
+   Prefix / Pattern / AND / OR / AND-NOT / NOT) evaluate as numpy
+   column arithmetic over factorized (doc, leaf) codes — zero Python
+   per doc; queries with phrase/NEAR nodes fall back to a per-doc AST
+   walk (the reference's DAAT loop, src/search.c:2249-2637) restricted
+   to the docs that contain at least one of their leaves,
+5. per-partition top-k (or every match when k is None), then one tiny
+   per-query merge.
 
-The per-doc evaluator mirrors ``oracle.engine.OracleIndex._eval``
-operator for operator (same float op order, same posdata separator
-rules), so ``search_batch`` results are rank-identical to sequential
-``search()`` and to the pure-Python oracle; every operator except
-unary NOT is pointwise per doc, which is exactly why the per-doc
-restriction is lossless. Unary-NOT queries (complement of the corpus)
-are rejected — they need the full docs table, use ``search()``.
+The kernel implements swish-e's result-list operators (andresultlists,
+orresultlists, notresultlist, phraseresultlists, nearresultlists;
+reference src/search.c:1979-2852) and mirrors
+``oracle.engine.OracleIndex._eval`` operator for operator (same float op
+order, same posdata separator rules), so every path is rank-identical
+to the pure-Python oracle and bit-identical to the others. Every
+operator except unary NOT is pointwise per doc, which is why the
+per-doc restriction and the property-limit semi-join before scoring are
+lossless. Unary NOT (score 1000 where the child is absent,
+notresultlist, reference src/search.c:2514-2553) needs every live doc
+in its partition: a query holding one gets one presence row per live
+doc under the ``PRESENCE`` leaf, which no query can name.
 
 Scale shape at 100 TB: the scan stays partition-pruned no matter how
 many queries are batched (leaf conds OR together), the doc_id shuffle
@@ -43,6 +49,11 @@ from .parser import (
 )
 
 BATCH_RESULT_SCHEMA = "query_id string, doc_id long, score double"
+
+# (field, term) of the per-doc presence rows that unary NOT evaluates
+# over: not null (pd.factorize codes nulls as -1) and not a token any
+# query can produce
+PRESENCE = ("\x00", "\x00")
 
 
 def _has_not(node) -> bool:
@@ -176,6 +187,9 @@ def eval_doc(node, entries, dl, idf, avgdl, expansions):
         right = eval_doc(node.right, entries, dl, idf, avgdl,
                          expansions)
         return left if right is None else None
+    if isinstance(node, Not):
+        child = eval_doc(node.child, entries, dl, idf, avgdl, expansions)
+        return (1000.0, []) if child is None else None
     if isinstance(node, Near):
         from .positional import near_chain
 
@@ -254,13 +268,18 @@ def _eval_vec(node, cols, n_docs, expansions, np):
         _, rp = _eval_vec(node.right, cols, n_docs, expansions, np)
         p = lp & ~rp
         return np.where(p, ls, 0.0), p
+    if isinstance(node, Not):
+        _, cp = _eval_vec(node.child, cols, n_docs, expansions, np)
+        return np.where(cp, 0.0, 1000.0), ~cp
     raise TypeError(f"non-vectorizable node in batch eval: {node!r}")
 
 
-def _batch_kernel(batches, asts, idf, avgdl, expansions, trigger, k):
+def _batch_kernel(batches, asts, idf, avgdl, expansions, k):
     """Per-partition kernel: numpy column evaluation for the
     non-positional queries, per-doc DAAT walk (restricted to trigger
-    docs) for the positional ones; local top-k per query."""
+    docs, or every doc for a query holding a unary NOT) for the
+    positional ones; local top-k per query, every match when k is
+    None."""
     import numpy as np
     import pandas as pd
 
@@ -319,7 +338,9 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, trigger, k):
         for qid, node in pos_asts:
             for leaf in _query_leaves(node, expansions):
                 pos_trigger.setdefault(leaf, []).append(qid)
-        cand = np.zeros(n_docs, dtype=bool)
+        # a NOT query can match docs holding none of its leaves
+        every_doc = [qid for qid, node in pos_asts if _has_not(node)]
+        cand = np.full(n_docs, bool(every_doc))
         for leaf in pos_trigger:
             e = cols.get(leaf)
             if e is not None:
@@ -345,7 +366,7 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, trigger, k):
             entries = {(fields[i], terms[i]): (int(tfs[i]), poss[i])
                        for i in g}
             dlv = int(dls[g[0]])
-            cands: set = set()
+            cands = set(every_doc)
             for ekey in entries:
                 cands.update(pos_trigger.get(ekey, ()))
             for qid in cands:
@@ -373,6 +394,77 @@ def _topk_merge(pdf, k):
                             ascending=[False, True]).head(k))
 
 
+def evaluate(engine, asts, k, structure_mask=None, limits=None):
+    """Every Spark-side query evaluation: scan, decode and df for the
+    union of ``asts`` ([(query_id, parsed AST)]), then
+    ``score_decoded``. Returns a DataFrame (query_id, doc_id, score)
+    holding each query's top-k per doc_id partition (every match when
+    ``k`` is None); callers merge or order it."""
+    from functools import reduce
+
+    from pyspark.sql import functions as F
+
+    from .executor import _expand_sorted
+
+    # one AST drives the scan planners itself (required-leaf chunk
+    # pruning and allowlist); a union's Or root has no required leaves
+    node = reduce(Or, (n for _, n in asts))
+    decoded = engine._decoded(node, structure_mask)
+    dfs = engine._term_stats(node, decoded, structure_mask) \
+        if decoded is not None else {}
+    # wildcards expand over the scanned vocabulary (sorted == the
+    # oracle's vocab-order accumulation)
+    terms: dict = {}
+    for field, term in sorted(dfs):
+        terms.setdefault(field, []).append(term)
+    expansions: dict = {}
+    wild: list = []
+    for _, n in asts:
+        _collect_expandables(n, wild)
+    for nd in wild:
+        expansions[_expansion_key(nd)] = _expand_sorted(
+            terms.get(nd.field, []), nd)
+    if any(_has_not(n) for _, n in asts):
+        # one presence row per live doc, added after df is counted
+        live = engine.handle.live_docs().select(
+            F.lit(PRESENCE[0]).alias("field"),
+            F.lit(PRESENCE[1]).alias("term"), "doc_id",
+            F.lit(0).cast("long").alias("tf"),
+            F.col("doc_len").cast("long").alias("dl"),
+            F.lit(None).cast("array<int>").alias("positions"),
+            F.lit(None).cast("binary").alias("structs"))
+        decoded = live if decoded is None else decoded.unionByName(live)
+    if decoded is None:
+        return engine.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
+    return score_decoded(engine, decoded, asts, dfs, k, limits,
+                         expansions)
+
+
+def score_decoded(engine, decoded, asts, dfs, k, limits=None,
+                  expansions=None):
+    """Score decoded posting rows (the decode kernels' schema) with the
+    batch kernel after one doc_id shuffle. ``dfs``: (field, term) ->
+    df for idf. Property ``limits`` keep only the rows of docs that
+    pass them, before scoring: every operator is pointwise per doc,
+    and for unary NOT (complement over live docs, then the filter) the
+    result is the same."""
+    from ..oracle.engine import bm25_idf
+    from .proplimit import limits_cond
+
+    stats = engine.handle.stats
+    idf = {key: bm25_idf(stats["n_docs"], df) for key, df in dfs.items()}
+    if limits:
+        decoded = decoded.join(
+            engine.handle.live_docs()
+            .filter(limits_cond(limits, engine.handle.cfg))
+            .select("doc_id"), "doc_id", "left_semi")
+    avgdl = stats["avgdl"]
+    expansions = expansions or {}
+    return decoded.repartition("doc_id").mapInPandas(
+        lambda it: _batch_kernel(it, asts, idf, avgdl, expansions, k),
+        schema=BATCH_RESULT_SCHEMA)
+
+
 def search_batch(engine, queries, k: int = 10):
     """Top-k of every query in ONE shared pipeline.
 
@@ -381,69 +473,14 @@ def search_batch(engine, queries, k: int = 10):
     ``[engine.search_df(q, k) for q in queries]``, bit-identical
     scores, in one scan + two bounded shuffles instead of N jobs.
     """
-    from functools import reduce
-
-    from pyspark.sql import functions as F
-
-    from ..oracle.engine import bm25_idf
-
     if not isinstance(queries, dict):
         queries = {f"q{i:03d}": q for i, q in enumerate(queries)}
     engine.handle.ensure_current()
-    asts = []
-    for qid, qs in queries.items():
-        node = parse_query(qs, engine.cfg,
-                           phrase_delim=getattr(engine, 'phrase_delim', '"'))
-        if _has_not(node):
-            raise ValueError(
-                f"batch query {qid!r}: unary NOT (complement) is not "
-                "batchable — it scores the whole corpus; use search()")
-        asts.append((qid, node))
+    asts = [(qid, parse_query(qs, engine.cfg,
+                              phrase_delim=engine.phrase_delim))
+            for qid, qs in queries.items()]
     if not asts:
         return engine.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-
-    # union AST: drives the shared scan/decode/df planning only (an Or
-    # root has no required leaves, so no conjunctive pruning applies)
-    combined = reduce(Or, (n for _, n in asts))
-
-    # driver-side prefix/pattern expansion (terms-table scan, cached)
-    expansions: dict = {}
-    expandables: list = []
-    for _, node in asts:
-        _collect_expandables(node, expandables)
-    for nd in expandables:
-        key = _expansion_key(nd)
-        if key in expansions:
-            continue
-        by_bucket = (engine._expand_prefix(nd.field, nd.prefix)
-                     if isinstance(nd, Prefix)
-                     else engine._expand_pattern(nd))
-        if by_bucket is None:
-            raise ValueError(
-                f"batch query wildcard {key} expands past "
-                f"{engine.PREFIX_EXPAND_CAP} terms")
-        # sorted == the oracle's vocab-order accumulation
-        expansions[key] = sorted(
-            t for ts in by_bucket.values() for t in ts)
-
-    decoded = engine._decoded(combined, None)
-    if decoded is None:
-        return engine.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
-    stats = engine.handle.stats
-    dfs = engine._term_stats(combined, decoded, None)
-    avgdl = max(stats["avgdl"], 1e-9)
-    idf = {key: bm25_idf(stats["n_docs"], df)
-           for key, df in dfs.items()}
-
-    trigger: dict = {}
-    for qid, node in asts:
-        for leaf in _query_leaves(node, expansions):
-            trigger.setdefault(leaf, []).append(qid)
-
-    local = decoded.repartition("doc_id").mapInPandas(
-        lambda it: _batch_kernel(it, asts, idf, avgdl, expansions,
-                                 trigger, k),
-        schema=BATCH_RESULT_SCHEMA)
-    return (local.groupBy("query_id")
+    return (evaluate(engine, asts, k).groupBy("query_id")
             .applyInPandas(lambda pdf: _topk_merge(pdf, k),
                            schema=BATCH_RESULT_SCHEMA))

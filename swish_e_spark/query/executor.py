@@ -9,40 +9,29 @@ once per handle (reference src/db_native.c).
 ``search()`` then runs no Spark job: the leaves' chunk rows are looked
 up in a (field, term) dictionary (prefixes and patterns expand over a
 sorted per-field term list), decoded by ``_decode_kernel`` (structure
-mask included), stripped of tombstoned docs, and scored by the
-``search_batch`` kernel (query/batch.py) as a single partition. WAND,
-the chunk pruner, the allowlist and the θ/dictionary/df caches below
-are not used on this path. ``search()`` with property ``limits`` or a
-unary NOT, every ``search()`` on an over-budget index, and
+mask included), stripped of tombstoned docs, and scored by the batch
+kernel (query/batch.py) as a single partition; unary NOT evaluates over
+presence rows of the live docs, whose ids and lengths the handle keeps.
+WAND, the chunk pruner, the allowlist and the θ/dictionary/df caches
+below are not used on this path. ``search()`` with property
+``limits``, every ``search()`` on an over-budget index, and
 ``search_df``/``match_df``/``search_batch`` always take the Spark path;
 ``last_search_path`` records which one ran.
 
 Spark path. The rebuild of swish-e's search path (SURVEY.md §3.2): the
 driver compiles the query (shared compiler, query/parser.py), plans a
-partition-pruned scan of the segment chunks for the needed terms, decodes
-postings in an Arrow-batched kernel, and evaluates the boolean algebra as
-DataFrame operations:
-
-- exact term lookup → `term_bucket` partition filter + `term =` predicate
-  pushed to parquet (the hash-probe analogue,
-  /root/reference/src/search.c:1618-1629),
-- prefix `foo*` → `startsWith` pushdown over term-sorted files
-  (/root/reference/src/search.c:1631-1843),
-- AND → inner join on doc_id (sort-merge,
-  andresultlists /root/reference/src/search.c:2249-2321),
-- OR → union + groupBy(doc_id) sum (orresultlists,
-  /root/reference/src/search.c:2335-2434),
-- NOT → anti-join complement with rank 1000 (notresultlist,
-  /root/reference/src/search.c:2514-2553),
-- AND-NOT → left_anti join (notresultlists,
-  /root/reference/src/search.c:2804-2852),
-- PHRASE/NEAR → position-array joins checked in a vectorized kernel
-  (phraseresultlists/nearresultlists,
-  /root/reference/src/search.c:1979-2637),
-- structure mask → vectorized bitmask over per-position structure bytes
-  (test_structure, /root/reference/src/search.c:1475-1494),
-- top-k → orderBy(score desc, doc_id).limit(k): per-partition heap +
-  driver merge (new vs the reference, which sorts the full result list).
+partition-pruned scan of the segment chunks for the needed terms (exact
+terms by `term_bucket` partition + `term =` predicate, the hash-probe
+analogue, reference src/search.c:1618-1629; prefixes and patterns via
+the terms table, reference src/search.c:1631-1843), decodes postings in
+an Arrow-batched kernel (structure mask as a vectorized bitmask over
+per-position structure bytes, test_structure, reference
+src/search.c:1475-1494), and scores the decoded rows with the same
+batch kernel as the resident path (query/batch.py ``evaluate``) after
+one doc_id shuffle. Property limits are a semi-join on the decoded rows
+before scoring; top-k is orderBy(score desc, doc_id).limit(k) over the
+per-partition top-k (new vs the reference, which sorts the full result
+list).
 
 Chunk pruning (block-max groundwork): for conjunctive nodes the chunk
 doc-ranges of the rarest term are intersected against the other terms'
@@ -51,9 +40,8 @@ contain a match are never unpacked. Per-block (max_tf, min_dl) bounds are
 stored in the segments for full block-max WAND.
 
 Scores are computed with the exact same float64 expression as the oracle
-(oracle/engine.py) in the same AST association order; only n-ary
-aggregation paths (OR/prefix groupBy sums) may differ by float
-re-association, which the 1e-6-relative rank-identity contract absorbs.
+(oracle/engine.py) in the same per-doc operation order, so ``search()``,
+``search_df`` and ``search_batch`` agree bit for bit.
 """
 
 from __future__ import annotations
@@ -63,9 +51,8 @@ import pandas as pd
 from ..codec.postings import B, K1
 from ..index.builder import IndexHandle, term_bucket
 from ..oracle.engine import bm25_idf
-from .proplimit import limits_cond
 from .parser import (
-    And, AndNot, Near, Not, Or, Pattern, Phrase, Prefix, Term,
+    And, AndNot, Near, Or, Pattern, Phrase, Prefix, Term,
     parse_query,
 )
 
@@ -268,20 +255,12 @@ def _wand_block_kernel(batches, prune: dict, theta: float,
             yield pd.concat(frames, ignore_index=True)
 
 
-def _needs_positions(node) -> bool:
-    if isinstance(node, (Phrase, Near)):
-        return True
-    if isinstance(node, (And, Or, AndNot)):
-        return _needs_positions(node.left) or _needs_positions(node.right)
-    if isinstance(node, Not):
-        return _needs_positions(node.child)
-    return False
-
-
 def _expand_sorted(terms: list, node) -> list:
     """Terms of one field's sorted vocabulary matching a Prefix or
     Pattern node: a bisect to the literal prefix's range, then (for
-    patterns) the same anchored regex ``_eval`` applies."""
+    patterns) the anchored regex of the terms-table expansion. Both
+    evaluators expand with it: the resident path over the index's
+    vocabulary, ``batch.evaluate`` over the scanned terms' df keys."""
     from bisect import bisect_left
 
     pre = node.prefix if isinstance(node, Prefix) \
@@ -706,6 +685,8 @@ class SparkQueryEngine:
     def _decoded(self, node, structure_mask, need_structs: bool = False):
         from pyspark.sql import functions as F
 
+        from .batch import _is_positional
+
         scan = self._segment_scan(node)
         if scan is None:
             return None
@@ -729,7 +710,7 @@ class SparkQueryEngine:
                 expr = F.when(F.col("shard") == sid,
                               F.lit(b).cast("long")).otherwise(expr)
             scan = scan.withColumn("base", expr)
-        need_pos = _needs_positions(node)
+        need_pos = _is_positional(node)
         mask = structure_mask
         # the decode kernel never reads the block-bound metadata —
         # dropping it prunes four array columns from the scan
@@ -1017,12 +998,12 @@ class SparkQueryEngine:
 
         def decode_eval(sub_scan):
             return self._wand_decode_eval(node, sub_scan, df_by_leaf,
-                                          stats, limits)
+                                          k, limits)
 
         # θ seeding. Pure-OR trees (no required/aux leaves) take the
         # cheap path: collect the seed chunks' TF binaries (a few
-        # hundred KB) and score them ON THE DRIVER with the exact
-        # _leaf_term float64 expression — one tiny fetch instead of a
+        # hundred KB) and score them ON THE DRIVER with the kernel's
+        # exact float64 BM25 expression — one tiny fetch instead of a
         # full decode+sort Spark job. Docs whose other-leaf postings
         # fall outside the seed score LOW, so θ only underestimates
         # (safe). Other tree shapes keep the Spark seed job.
@@ -1119,7 +1100,7 @@ class SparkQueryEngine:
         main_scan = scan_for(keep)
         if main_scan is None:
             self.last_wand_stats["blocks_pruned"] = planned_pruned
-            return self._empty(False).select("doc_id", "score").limit(0)
+            return self.spark.createDataFrame([], "doc_id long, score double")
         # main pass: surviving chunks decode with BLOCK-granularity
         # skipping — via the precomputed range-aware masks when the
         # block planner ran, else against θ with global others
@@ -1130,7 +1111,7 @@ class SparkQueryEngine:
             prune = {key: (idf_by_leaf[key], total_gub - gub[key])
                      for key in gub}
         out = (self._wand_decode_eval(node, main_scan, df_by_leaf,
-                                      stats, limits, prune, theta, acc)
+                                      k, limits, prune, theta, acc)
                .select("doc_id", "score")
                .orderBy(F.desc("score"), F.asc("doc_id"))
                .limit(k))
@@ -1182,7 +1163,7 @@ class SparkQueryEngine:
                            bases, want_docs=frozenset()):
         """θ for a pure-OR tree from a driver-side decode of the seed
         chunks: fetch their TF binaries (no positions/structures) and
-        evaluate the exact _leaf_term BM25 expression in numpy,
+        evaluate the kernel's exact BM25 expression in numpy,
         summing per doc across leaves. Returns (θ, exact_docs) where
         θ is the k-th best achieved score (0.0 when fewer than k docs
         are seen — pruning disabled, safe) and exact_docs maps each
@@ -1335,16 +1316,20 @@ class SparkQueryEngine:
             pruned += int((~m).sum())
         return masks, pruned, total
 
-    def _wand_decode_eval(self, node, sub_scan, df_by_leaf, stats,
-                          limits, prune: dict | None = None,
+    def _wand_decode_eval(self, node, sub_scan, df_by_leaf, k, limits,
+                          prune: dict | None = None,
                           theta: float = 0.0, acc=None):
-        """Decode a chunk scan (TF-only) and evaluate the query node,
-        applying prop limits — shared by both WAND planners. With
+        """Decode a chunk scan (TF-only) and score the query node with
+        the batch kernel (prop limits applied there), keeping each
+        partition's top-k — shared by both WAND planners. With
         ``prune``/``theta`` set, the decode kernel skips individual
         128-doc blocks whose score upper bound is below θ
         (_wand_block_kernel)."""
         from pyspark.sql import functions as F
 
+        from .batch import score_decoded
+
+        stats = self.handle.stats
         bases = self.handle.shard_bases
         if prune is not None:
             sub_scan = sub_scan.drop("pos_bin", "structs_bin")
@@ -1372,14 +1357,8 @@ class SparkQueryEngine:
                        .mapInPandas(
                            lambda it: _decode_kernel(it, False, None),
                            schema=DECODED_SCHEMA))
-        result = self._eval(node, decoded, df_by_leaf, stats)
-        if limits:
-            docs = self.handle.live_docs()
-            result = result.join(
-                docs.filter(limits_cond(limits, self.handle.cfg))
-                .select("doc_id"),
-                "doc_id", "left_semi")
-        return result
+        return score_decoded(self, decoded, [("q", node)], df_by_leaf, k,
+                             limits)
 
     def _search_wand_big(self, node, k, limits, scoring, aux, scan,
                          stats, avgdl):
@@ -1413,7 +1392,7 @@ class SparkQueryEngine:
                     .agg(F.sum("df").alias("df"),
                          F.max(ub_raw).alias("gub_raw")).collect())
         if not per_leaf:
-            return self._empty(False).select("doc_id", "score").limit(0)
+            return self.spark.createDataFrame([], "doc_id long, score double")
         df_by_leaf = {(r["field"], r["term"]): r["df"] for r in per_leaf}
         idf_by_leaf = {key: bm25_idf(stats["n_docs"], d)
                        for key, d in df_by_leaf.items()}
@@ -1475,7 +1454,7 @@ class SparkQueryEngine:
         elif seed_cond is not None:
             seed_rows = (self._wand_decode_eval(
                 node, self.handle.segments().filter(seed_cond),
-                df_by_leaf, stats, limits)
+                df_by_leaf, k, limits)
                 .select("doc_id", "score")
                 .orderBy(F.desc("score"), F.asc("doc_id"))
                 .limit(k).collect())
@@ -1512,7 +1491,7 @@ class SparkQueryEngine:
             others_static = total_gub - gub[key] - rare_gub
             prune[key] = (idf_by_leaf[key], others_static, rare_list)
         out = (self._wand_decode_eval(node, main_scan, df_by_leaf,
-                                      stats, limits, prune, theta, acc)
+                                      k, limits, prune, theta, acc)
                .select("doc_id", "score")
                .orderBy(F.desc("score"), F.asc("doc_id"))
                .limit(k))
@@ -1537,6 +1516,8 @@ class SparkQueryEngine:
         """
         from pyspark.sql import functions as F
 
+        from .batch import evaluate
+
         self.handle.ensure_current()  # stale caches must error, not lie
         node = parse_query(q, self.cfg,
                            phrase_delim=self.phrase_delim)
@@ -1545,52 +1526,21 @@ class SparkQueryEngine:
                                        force=(wand == "force"))
             if pruned is not None:
                 return pruned
-        # single-leaf fast path: the decoded scan feeds exactly one
-        # consumer (prefix/pattern scoring is a single broadcast-join
-        # pass), so persist + checkpoint (two extra jobs at query
-        # latency) buy nothing — return the lazy one-job plan. With a
-        # structure mask or tombstones, _term_stats consumes decoded
-        # too, so the persist stays.
-        single = isinstance(node, (Term, Prefix, Pattern)) \
-            and structure_mask is None \
-            and self.handle.removed() is None
-        decoded = self._decoded(node, structure_mask)
-        if decoded is not None and not single:
-            decoded = decoded.persist()
-        stats = self.handle.stats
-        dfs = self._term_stats(node, decoded, structure_mask) \
-            if decoded is not None else {}
-        try:
-            result = self._eval(node, decoded, dfs, stats)
-            if limits:
-                docs = self.handle.live_docs()
-                result = result.join(
-                    docs.filter(limits_cond(limits, self.handle.cfg))
-                    .select("doc_id"), "doc_id", "left_semi")
-            out = (result.select("doc_id", "score")
-                   .orderBy(F.desc("score"), F.asc("doc_id"))
-                   .limit(k))
-            if not single:
-                out = out.localCheckpoint()  # materialize pre-unpersist
-            return out
-        finally:
-            if decoded is not None and not single:
-                decoded.unpersist()
+        return (evaluate(self, [("q", node)], k, structure_mask, limits)
+                .select("doc_id", "score")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
     def search(self, q: str, k: int = 10, structure_mask=None,
                limits: dict | None = None):
         """Top-k as [(doc_id, score)] — the oracle-comparable surface.
 
         Answered in-process from the resident copy of the index when
-        the engine holds one and the query has no property limits and
-        no unary NOT; otherwise through the Spark plan of
-        ``search_df``. ``last_search_path`` records which ran."""
-        from .batch import _has_not
-
+        the engine holds one and the query has no property limits;
+        otherwise through the Spark plan of ``search_df``.
+        ``last_search_path`` records which ran."""
         self.handle.ensure_current()  # stale caches must error, not lie
         node = parse_query(q, self.cfg, phrase_delim=self.phrase_delim)
-        if self._resident is not None and not limits \
-                and not _has_not(node):
+        if self._resident is not None and not limits:
             self.last_search_path = "resident"
             return self._search_resident(node, k, structure_mask)
         self.last_search_path = "spark"
@@ -1622,8 +1572,8 @@ class SparkQueryEngine:
         import numpy as np
 
         from .batch import (
-            _batch_kernel, _collect_expandables, _expansion_key,
-            _query_leaves,
+            PRESENCE, _batch_kernel, _collect_expandables, _expansion_key,
+            _has_not, _is_positional, _query_leaves,
         )
 
         res = self._resident
@@ -1637,28 +1587,36 @@ class SparkQueryEngine:
         rows = [res.rows[leaf]
                 for leaf in sorted(_query_leaves(node, expansions))
                 if leaf in res.rows]
-        if not rows:
-            return []
-        need_pos = _needs_positions(node)
-        cols = ["field", "term", "base", "docs_bin", "tfs_bin", "dls_bin"]
-        if need_pos or structure_mask is not None:
-            cols.append("pos_bin")
-        if structure_mask is not None:
-            cols.append("structs_bin")
-        chunks = res.chunks.take(np.concatenate(rows)).select(cols)
-        decoded = next(_decode_kernel([chunks.to_pandas()], need_pos,
-                                      structure_mask), None)
-        if decoded is None:
-            return []
-        if len(res.removed):
+        decoded = None
+        if rows:
+            need_pos = _is_positional(node)
+            cols = ["field", "term", "base", "docs_bin", "tfs_bin",
+                    "dls_bin"]
+            if need_pos or structure_mask is not None:
+                cols.append("pos_bin")
+            if structure_mask is not None:
+                cols.append("structs_bin")
+            chunks = res.chunks.take(np.concatenate(rows)).select(cols)
+            decoded = next(_decode_kernel([chunks.to_pandas()], need_pos,
+                                          structure_mask), None)
+        if decoded is not None and len(res.removed):
             decoded = decoded[~np.isin(decoded["doc_id"].to_numpy(),
                                        res.removed)]
         stats = self.handle.stats
-        idf = {key: bm25_idf(stats["n_docs"], int(df)) for key, df in
-               decoded.groupby(["field", "term"], sort=False).size()
-               .items()}
+        idf = {} if decoded is None else {
+            key: bm25_idf(stats["n_docs"], int(df)) for key, df in
+            decoded.groupby(["field", "term"], sort=False).size().items()}
+        if _has_not(node):
+            # unary NOT: one presence row per live doc, as in
+            # batch.evaluate (pd.concat drops a None decoded)
+            decoded = pd.concat([decoded, pd.DataFrame({
+                "field": PRESENCE[0], "term": PRESENCE[1],
+                "doc_id": res.doc_ids, "tf": 0, "dl": res.doc_len,
+                "positions": None, "structs": None})], ignore_index=True)
+        if decoded is None:
+            return []
         out = next(_batch_kernel([decoded], [("q", node)], idf,
-                                 stats["avgdl"], expansions, None, k),
+                                 stats["avgdl"], expansions, k),
                    None)
         if out is None:
             return []
@@ -1678,222 +1636,10 @@ class SparkQueryEngine:
                  limits: dict | None = None):
         """All matching (doc_id, score) rows, unranked — for match-set
         queries where top-k pruning is not wanted."""
-        from pyspark.sql import functions as F
+        from .batch import evaluate
 
         self.handle.ensure_current()  # stale caches must error, not lie
         node = parse_query(q, self.cfg,
                            phrase_delim=self.phrase_delim)
-        single = isinstance(node, (Term, Prefix, Pattern)) \
-            and structure_mask is None \
-            and self.handle.removed() is None
-        decoded = self._decoded(node, structure_mask)
-        if decoded is not None and not single:
-            decoded = decoded.persist()
-        stats = self.handle.stats
-        dfs = self._term_stats(node, decoded, structure_mask) \
-            if decoded is not None else {}
-        try:
-            result = self._eval(node, decoded, dfs, stats)
-            if limits:
-                docs = self.handle.live_docs()
-                result = result.join(
-                    docs.filter(limits_cond(limits, self.handle.cfg))
-                    .select("doc_id"), "doc_id", "left_semi")
-            result = result.select("doc_id", "score")
-            return result if single else result.localCheckpoint()
-        finally:
-            if decoded is not None and not single:
-                decoded.unpersist()
-
-    def _leaf_term(self, decoded, field, term, dfs, stats, with_pos):
-        from pyspark.sql import functions as F
-
-        df = dfs.get((field, term), 0)
-        if df == 0:
-            return self._empty(with_pos)
-        idf = bm25_idf(stats["n_docs"], df)
-        avgdl = max(stats["avgdl"], 1e-9)
-        sub = decoded.filter((F.col("field") == field)
-                             & (F.col("term") == term))
-        # exact same float64 expression as the oracle's
-        # bm25_impact_scalar — same operation order
-        impact = (F.col("tf") * (K1 + 1.0)) / (
-            F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl))
-        out = sub.select(
-            "doc_id", (F.lit(idf) * impact).alias("score"),
-            (F.col("positions") if with_pos
-             else F.lit(None).cast("array<int>")).alias("positions"))
-        # a term may span multiple chunks/shards — one row per chunk-doc
-        # is already unique (doc in exactly one chunk), no agg needed
-        return out
-
-    def _empty(self, with_pos=True):
-        return self.spark.createDataFrame(
-            [], "doc_id long, score double, positions array<int>")
-
-    def _eval(self, node, decoded, dfs, stats):
-        from pyspark.sql import functions as F
-
-        if isinstance(node, Term):
-            # positions always travel on the exhaustive path: the
-            # result surface (output.py) reads them for match display
-            return self._leaf_term(decoded, node.field, node.term, dfs,
-                                   stats, True)
-        if isinstance(node, (Prefix, Pattern)):
-            if isinstance(node, Prefix):
-                matching = [(f, t) for (f, t) in dfs
-                            if f == node.field
-                            and t.startswith(node.prefix)]
-            else:
-                import re as _re
-
-                rx = _re.compile(node.regex())
-                matching = [(f, t) for (f, t) in dfs
-                            if f == node.field and rx.fullmatch(t)]
-            if not matching:
-                return self._empty()
-            # ONE pass over the decoded scan: per-term idf arrives via
-            # a broadcast join, score = idf*impact per row, then the
-            # same OR-combination agg — instead of a union of one
-            # filtered branch per matched term, which referenced (and
-            # re-executed) the decode subtree once per term
-            idf_rows = [(f, t, bm25_idf(stats["n_docs"], dfs[(f, t)]))
-                        for f, t in sorted(matching)]
-            tdf = F.broadcast(self.spark.createDataFrame(
-                idf_rows, "field string, term string, idf double"))
-            avgdl = max(stats["avgdl"], 1e-9)
-            impact = (F.col("tf") * (K1 + 1.0)) / (
-                F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / avgdl))
-            return (decoded.join(tdf, ["field", "term"])
-                    .select("doc_id",
-                            (F.col("idf") * impact).alias("score"),
-                            "positions")
-                    .groupBy("doc_id")
-                    .agg(F.sum("score").alias("score"),
-                         F.array_sort(F.flatten(F.collect_list("positions")))
-                         .alias("positions")))
-        if isinstance(node, Phrase):
-            return self._eval_phrase(node, decoded, dfs, stats)
-        if isinstance(node, And):
-            left = self._eval(node.left, decoded, dfs, stats)
-            right = self._eval(node.right, decoded, dfs, stats)
-            # unsorted concat, as andresultlists copies l then r
-            # (/root/reference/src/search.c:2300-2304) — preserves
-            # NEAR series separators for an enclosing NEAR
-            return (left.alias("l").join(right.alias("r"), "doc_id")
-                    .select("doc_id",
-                            (F.col("l.score") + F.col("r.score"))
-                            .alias("score"),
-                            F.concat(
-                                F.coalesce(F.col("l.positions"),
-                                           F.array().cast("array<int>")),
-                                F.coalesce(F.col("r.positions"),
-                                           F.array().cast("array<int>")))
-                            .alias("positions")))
-        if isinstance(node, Or):
-            left = self._eval(node.left, decoded, dfs, stats)
-            right = self._eval(node.right, decoded, dfs, stats)
-            # an OR result is a PLAIN merged position list (the
-            # reference has no series concept for OR): NEAR-operand
-            # separators must be dropped, not sorted to the front
-            # where an enclosing NEAR would see an empty first series
-            return (left.unionByName(right).groupBy("doc_id")
-                    .agg(F.sum("score").alias("score"),
-                         F.array_sort(F.array_remove(
-                             F.flatten(F.collect_list("positions")), 0))
-                         .alias("positions")))
-        if isinstance(node, AndNot):
-            left = self._eval(node.left, decoded, dfs, stats)
-            right = self._eval(node.right, decoded, dfs, stats)
-            return left.join(right.select("doc_id"), "doc_id", "left_anti")
-        if isinstance(node, Not):
-            child = self._eval(node.child, decoded, dfs, stats)
-            return (self.handle.live_docs().select("doc_id")
-                    .join(child.select("doc_id"), "doc_id", "left_anti")
-                    .select("doc_id", F.lit(1000.0).alias("score"),
-                            F.lit(None).cast("array<int>")
-                            .alias("positions")))
-        if isinstance(node, Near):
-            return self._eval_near(node, decoded, dfs, stats)
-        raise TypeError(f"unknown node {node!r}")
-
-    def _eval_phrase(self, node: Phrase, decoded, dfs, stats):
-        from pyspark.sql import functions as F
-
-        seq = [(i, t) for i, t in enumerate(node.terms) if t is not None]
-        leaf_dfs = []
-        for j, (off, term) in enumerate(seq):
-            if dfs.get((node.field, term), 0) == 0:
-                return self._empty()
-            leaf = self._leaf_term(decoded, node.field, term, dfs, stats,
-                                   True)
-            leaf_dfs.append(
-                leaf.select(F.col("doc_id"),
-                            F.col("score").alias(f"s{j}"),
-                            F.col("positions").alias(f"p{j}")))
-        joined = leaf_dfs[0]
-        for nxt in leaf_dfs[1:]:
-            joined = joined.join(nxt, "doc_id")
-        offsets = [off for off, _ in seq]
-        nterms = len(seq)
-
-        def check(batches):
-            import numpy as np
-
-            from .positional import batch_phrase
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                p_lists = [
-                    [np.asarray(a, dtype=np.int64)
-                     for a in pdf[f"p{j}"]]
-                    for j in range(nterms)]
-                ok = batch_phrase(p_lists, offsets)
-                sub = pdf[ok]
-                if len(sub):
-                    score = sum(sub[f"s{j}"] for j in range(nterms))
-                    kept = np.flatnonzero(ok)
-                    allpos = [
-                        np.sort(np.concatenate(
-                            [p_lists[j][i] for j in range(nterms)]))
-                        .astype("int32") for i in kept]
-                    yield pd.DataFrame({
-                        "doc_id": sub["doc_id"],
-                        "score": score,
-                        "positions": allpos,
-                    })
-
-        return joined.mapInPandas(
-            check, schema="doc_id long, score double, positions array<int>")
-
-    def _eval_near(self, node: Near, decoded, dfs, stats):
-        from pyspark.sql import functions as F
-
-        left = self._eval(node.left, decoded, dfs, stats)
-        right = self._eval(node.right, decoded, dfs, stats)
-        joined = (left.select("doc_id", F.col("score").alias("sl"),
-                              F.col("positions").alias("pl"))
-                  .join(right.select("doc_id",
-                                     F.col("score").alias("sr"),
-                                     F.col("positions").alias("pr")),
-                        "doc_id"))
-        d = node.distance
-
-        def check(batches):
-            from .positional import near_batch
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keep, merged = near_batch(pdf["pl"], pdf["pr"], d)
-                sub = pdf[keep]
-                if len(sub):
-                    yield pd.DataFrame({
-                        "doc_id": sub["doc_id"],
-                        "score": sub["sl"] + sub["sr"],
-                        "positions": merged,
-                    })
-
-        return joined.mapInPandas(
-            check, schema="doc_id long, score double, positions array<int>")
+        return evaluate(self, [("q", node)], None, structure_mask,
+                        limits).select("doc_id", "score")

@@ -87,9 +87,36 @@ class TestBatchIdentity:
         assert got["q000"] == [(d, s) for d, s in
                                engine.search("wolf", k=5)]
 
-    def test_not_rejected(self, engine):
-        with pytest.raises(ValueError, match="NOT"):
-            engine.search_batch({"bad": "not wolf"})
+    def test_not_matches_oracle(self, engine, oracle300):
+        qs = {"not": "NOT wolf", "and_not": "wolf AND (NOT pigs)",
+              "and_not2": "sugar AND (NOT pigs)"}
+        got = _by_query(engine.search_batch(qs, k=10))
+        for qid, q in qs.items():
+            orr = oracle300.query(q, k=10)
+            mine = got.get(qid, [])
+            assert [d for d, _ in mine] == [d for d, _ in orr], qid
+            for (_, a), (_, b) in zip(mine, orr):
+                assert a == pytest.approx(b, rel=1e-6), qid
+            assert mine == engine.search(q, k=10), qid
+
+    def test_wildcard_past_expand_cap(self, spark, index_dir, oracle300,
+                                      monkeypatch):
+        from swish_e_spark.query.executor import SparkQueryEngine
+        from swish_e_spark.query.parser import parse_query
+
+        monkeypatch.setattr(SparkQueryEngine, "PREFIX_EXPAND_CAP", 1)
+        eng = SparkQueryEngine(spark, IndexHandle(spark, index_dir))
+        node = parse_query("tail*", eng.cfg)
+        assert eng._expand_prefix(node.field, node.prefix) is None
+        want = oracle300.query("tail*", k=10)
+        assert want
+        got = _by_query(eng.search_batch({"w": "tail*"}, k=10))
+        spk = [(r["doc_id"], r["score"]) for r in
+               eng.search_df("tail*", 10, wand="off").collect()]
+        for mine in (got.get("w", []), spk):
+            assert [d for d, _ in mine] == [d for d, _ in want]
+            for (_, a), (_, b) in zip(mine, want):
+                assert a == pytest.approx(b, rel=1e-6)
 
     def test_malformed_raises(self, engine):
         from swish_e_spark.query.parser import QueryError

@@ -147,6 +147,13 @@ class TestRankIdentity:
         _assert_same(got, _spark_top(fresh, q, structure_mask=IN_TITLE),
                      1e-9, q)
 
+    @pytest.mark.parametrize("q", ["NOT pigs", "wolf AND (NOT pigs)",
+                                   "sugar AND (NOT pigs)"])
+    def test_unary_not_is_resident(self, q, fresh, oracle300):
+        got = _resident_top(fresh, q)
+        _assert_same(got, oracle300.query(q, k=10), 1e-6, q)
+        _assert_same(got, _spark_top(fresh, q), 1e-9, q)
+
     def test_all_matches(self, fresh, oracle300):
         # k past every match, including the huge-k range the Spark
         # path serves through match_df
@@ -174,7 +181,6 @@ class TestRankIdentity:
                                                   fresh.handle.out_dir))
         eng.search_df("pigs", 10, wand="off").collect()
         eng.search("pigs", limits={"lang": ("en", "en")})
-        eng.search("NOT pigs")
         assert "chunks" not in vars(eng._resident)
         _resident_top(eng, "pigs")
         assert "chunks" in vars(eng._resident)
@@ -303,14 +309,6 @@ class TestSparkFallback:
         assert fresh.last_search_path == "spark"
         _assert_same(got, oracle300.query("common0", k=10, limits=lim),
                      1e-6, "limits")
-
-    @pytest.mark.parametrize("q", ["NOT pigs", "wolf AND (NOT pigs)"])
-    def test_unary_not_takes_spark(self, q, fresh, oracle300):
-        got = fresh.search(q, k=10)
-        assert fresh.last_search_path == "spark"
-        _assert_same(got, oracle300.query(q, k=10), 1e-6, q)
-        # the next plain query is resident again
-        _resident_top(fresh, "pigs")
 
     def test_over_budget_takes_spark(self, spark, fresh, oracle300,
                                      monkeypatch):
