@@ -20,15 +20,28 @@ and compress_location_positions /root/reference/src/compress.c:484-528):
   bound (new vs the reference, which scores every posting —
   /root/reference/src/search.c:1766-1813; required by the north rule).
 
-Everything is numpy-vectorized; the per-doc nibble/varbyte choice is made
-with array masks, not Python loops over docs.
+The codec is batched, and the batch functions are its only
+implementation: ``pack_posting_lists`` packs N lists given as flat
+doc/tf/position/structure/dl arrays plus per-list counts, and
+``unpack_posting_lists`` decodes the binary columns of N chunk rows back
+to flat arrays plus per-list counts. A list's varbyte stream is the
+concatenation of its values' encodings, so a batch is encoded or
+decoded in one numpy pass over the concatenated buffers and split at
+per-list byte offsets; the per-doc nibble/varbyte choice is made with
+array masks. No numpy call is made per list, per doc or per value (the
+only per-list Python work is slicing out each list's ``bytes`` and
+block lists), so the fixed numpy cost is paid once per batch rather
+than once per list (cf. the reference's per-chunk compression,
+coalesce_word_locations, reference src/index.c). ``pack_posting_list``
+and ``unpack_posting_list`` are batch-of-one calls of the same
+functions.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .varbyte import delta_decode, delta_encode, vb_decode, vb_encode
+from .varbyte import vb_decode, vb_encode_array
 
 BLOCK_SIZE = 128
 K1 = 1.2
@@ -42,130 +55,255 @@ def bm25_impact(tfs, doc_lens, avgdl, k1=K1, b=B):
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / max(avgdl, 1e-9)))
 
 
-def _pack_positions(positions: np.ndarray, tfs: np.ndarray) -> bytes:
-    """positions = concatenated per-doc sorted position arrays."""
+def _offsets(lengths) -> np.ndarray:
+    """Exclusive prefix sums with the total appended (len n + 1)."""
+    out = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=out[1:])
+    return out
+
+
+def _ranges(starts, lengths) -> np.ndarray:
+    """Concatenation of ``arange(s, s + l)`` for every (s, l)."""
+    lengths = np.asarray(lengths, dtype=np.int64)
+    ends = np.cumsum(lengths)
+    if not ends.size or not ends[-1]:
+        return np.empty(0, dtype=np.int64)
+    return (np.repeat(np.asarray(starts, dtype=np.int64) - (ends - lengths),
+                      lengths) + np.arange(int(ends[-1])))
+
+
+def _per_list(owner, weights, n_lists: int) -> np.ndarray:
+    """Sum of ``weights`` per list, given each item's list index."""
+    return np.bincount(owner, weights=weights,
+                       minlength=n_lists).astype(np.int64)
+
+
+def _split_bytes(buf: np.ndarray, lengths) -> list:
+    """One ``bytes`` per list from a concatenated uint8 buffer."""
+    raw = buf.tobytes()
+    offs = _offsets(lengths).tolist()
+    return [raw[a:b] for a, b in zip(offs[:-1], offs[1:])]
+
+
+def _interleave(sections, n_lists: int):
+    """Per-list concatenation of several sections. Each section is
+    (uint8 buffer holding every list's part in list order, per-list
+    byte lengths); returns (buffer, per-list total lengths)."""
+    totals = np.zeros(n_lists, dtype=np.int64)
+    for _, lengths in sections:
+        totals += lengths
+    dest = _offsets(totals)[:-1]
+    out = np.empty(int(totals.sum()), dtype=np.uint8)
+    for buf, lengths in sections:
+        out[_ranges(dest, lengths)] = buf
+        dest = dest + lengths
+    return out, totals
+
+
+def _pack_positions(pos: np.ndarray, tfs: np.ndarray, counts: np.ndarray,
+                    list_of_doc: np.ndarray, local: np.ndarray):
+    """Every list's ``pos_bin`` → (buffer, per-list lengths). Per list:
+    flag bitmap (bit set = doc's deltas nibble-packed, the POS_4_BIT
+    analogue), varbyte first positions of all docs (A), uint32 length of
+    the nibble bytes then the nibble bytes of nibble docs (B), varbyte
+    non-first deltas of the other docs with tf > 1 (C)."""
+    n_lists = counts.size
     n_docs = tfs.size
-    if n_docs == 0:
-        return b""
-    pos = np.ascontiguousarray(positions, dtype=np.uint64)
     ends = np.cumsum(tfs)
     starts = ends - tfs
-    # per-doc delta encode in one pass: subtract shifted, then restore
-    # each doc's first position as absolute
-    deltas = np.empty_like(pos)
-    deltas[0] = pos[0]
-    np.subtract(pos[1:], pos[:-1], out=deltas[1:])
+    deltas = np.empty(pos.size, dtype=np.int64)
+    if pos.size:
+        deltas[0] = pos[0]
+        np.subtract(pos[1:], pos[:-1], out=deltas[1:])
     deltas[starts] = pos[starts]
+    doc_of_pos = np.repeat(np.arange(n_docs), tfs)
+    nonfirst = np.ones(pos.size, dtype=bool)
+    nonfirst[starts] = False
     # nibble eligibility: docs whose non-first deltas are all in [1,15]
     big = np.zeros(n_docs, dtype=bool)
-    if pos.size:
-        nonfirst = np.ones(pos.size, dtype=bool)
-        nonfirst[starts] = False
-        too_big_idx = np.flatnonzero(nonfirst & (deltas >= 16))
-        if too_big_idx.size:
-            big[np.searchsorted(ends, too_big_idx, side="right")] = True
+    big[doc_of_pos[nonfirst & (deltas >= 16)]] = True
     nibble = (~big) & (tfs > 1)
-    flags = np.packbits(nibble)
-    chunks: list[bytes] = [flags.tobytes()]
-    # first positions for every doc, varbyte, in doc order — encoded as
-    # one array; likewise the remaining deltas per class. To preserve
-    # per-doc interleaving on decode we store three sections:
-    #   A: varbyte(first_pos for all docs)
-    #   B: nibble bytes for nibble docs (concatenated, doc order)
-    #   C: varbyte(non-first deltas of non-nibble docs, doc order)
-    chunks.append(vb_encode(pos[starts]))
-    if nibble.any():
-        nib_tf = tfs[nibble] - 1
-        nib_mask = np.zeros(pos.size, dtype=bool)
-        for_docs = np.flatnonzero(nibble)
-        # mark non-first positions of nibble docs
-        seg = np.zeros(pos.size + 1, dtype=np.int8)
-        seg[starts[for_docs] + 1] += 1
-        seg[ends[for_docs]] -= 1
-        nib_mask = np.cumsum(seg[:-1]) > 0
-        nib_mask[starts] = False
-        nd = deltas[nib_mask].astype(np.uint8)
-        # pack two deltas per byte per doc (pad odd tf with 0 nibble)
-        n_bytes = (nib_tf + 1) // 2
-        b_ends = np.cumsum(n_bytes)
-        b_starts = b_ends - n_bytes
-        out = np.zeros(int(b_ends[-1]) if b_ends.size else 0, dtype=np.uint8)
-        d_ends = np.cumsum(nib_tf)
-        d_starts = d_ends - nib_tf
-        # high nibble = even-index delta, low nibble = odd-index delta
-        doc_of_delta = np.repeat(np.arange(nib_tf.size), nib_tf)
-        local = np.arange(nd.size) - d_starts[doc_of_delta]
-        byte_idx = b_starts[doc_of_delta] + local // 2
-        hi = (local % 2) == 0
-        np.bitwise_or.at(out, byte_idx[hi], nd[hi] << 4)
-        np.bitwise_or.at(out, byte_idx[~hi], nd[~hi])
-        chunks.append(np.concatenate(
-            [np.frombuffer(np.uint32(out.size).tobytes(), dtype=np.uint8), out]
-        ).tobytes())
-    else:
-        chunks.append(np.uint32(0).tobytes())
-    vb_docs = np.flatnonzero((~nibble) & (tfs > 1))
-    if vb_docs.size:
-        seg = np.zeros(pos.size + 1, dtype=np.int8)
-        seg[starts[vb_docs] + 1] += 1
-        seg[ends[vb_docs]] -= 1
-        vmask = np.cumsum(seg[:-1]) > 0
-        vmask[starts] = False
-        chunks.append(vb_encode(deltas[vmask]))
-    return b"".join(chunks)
+
+    flag_len = (counts + 7) // 8
+    bits = np.zeros(int(flag_len.sum()) * 8, dtype=bool)
+    bits[_offsets(flag_len)[list_of_doc] * 8 + local] = nibble
+    flags = np.packbits(bits)
+
+    firsts, first_nb = vb_encode_array(pos[starts])
+
+    nib_tf = tfs[nibble] - 1
+    nib_nb = (nib_tf + 1) // 2
+    nd = deltas[nonfirst & nibble[doc_of_pos]].astype(np.uint8)
+    b_starts = _offsets(nib_nb)[:-1]
+    d_ends = np.cumsum(nib_tf)
+    doc_of_delta = np.repeat(np.arange(nib_tf.size), nib_tf)
+    dlocal = np.arange(nd.size) - (d_ends - nib_tf)[doc_of_delta]
+    byte_idx = b_starts[doc_of_delta] + dlocal // 2
+    hi = (dlocal % 2) == 0
+    # high nibble = even-index delta, low nibble = odd-index delta (a
+    # padding 0 low nibble for odd counts: deltas are >= 1)
+    nib = np.zeros(int(nib_nb.sum()), dtype=np.uint8)
+    nib[byte_idx[hi]] = nd[hi] << 4
+    nib[byte_idx[~hi]] |= nd[~hi]
+    nib_len = _per_list(list_of_doc[nibble], nib_nb, n_lists)
+    has = counts > 0
+    nib_hdr = nib_len[has].astype("<u4").view(np.uint8)
+
+    vmask = nonfirst & big[doc_of_pos]
+    vdeltas, v_nb = vb_encode_array(deltas[vmask])
+
+    return _interleave([
+        (flags, flag_len),
+        (firsts, _per_list(list_of_doc, first_nb, n_lists)),
+        (nib_hdr, 4 * has.astype(np.int64)),
+        (nib, nib_len),
+        (vdeltas, _per_list(list_of_doc[doc_of_pos[vmask]], v_nb,
+                            n_lists)),
+    ], n_lists)
 
 
-def _unpack_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
+def pack_posting_lists(doc_ids, tfs, positions, structures, doc_lens,
+                       counts, block_size=BLOCK_SIZE) -> dict:
+    """Pack a batch of (term, field) posting lists in one pass.
+
+    The lists lie end to end in the flat inputs: ``counts[i]`` docs
+    (each sorted by doc_id), their tfs and doc lengths, Σtf positions
+    and (unless ``structures`` is None) Σtf structure bytes. Returns a
+    dict of per-list columns (FIXTURES.md §3 `segments` schema): ``df``
+    and ``cf`` arrays, one ``bytes`` per list for each binary column,
+    and one list per list for each block-max column. Requires no global
+    statistics — the block bound is (max tf, min dl) per block, valid
+    for any avgdl at query time."""
+    ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
+    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
+    dls = np.ascontiguousarray(doc_lens, dtype=np.int64)
+    pos = np.ascontiguousarray(positions, dtype=np.int64)
+    counts = np.ascontiguousarray(counts, dtype=np.int64)
+    n_lists = counts.size
+    doc_off = _offsets(counts)
+    list_of_doc = np.repeat(np.arange(n_lists), counts)
+    local = np.arange(ids.size) - doc_off[list_of_doc]
+    first = local == 0
+
+    # docID-delta, first doc of each list absolute
+    gaps = np.empty(ids.size, dtype=np.int64)
+    if ids.size:
+        gaps[0] = ids[0]
+        np.subtract(ids[1:], ids[:-1], out=gaps[1:])
+    gaps[first] = ids[first]
+    cols = {"df": counts, "cf": _per_list(list_of_doc, tfs, n_lists)}
+    for name, vals in (("docs_bin", gaps), ("tfs_bin", tfs),
+                       ("dls_bin", dls)):
+        buf, nb = vb_encode_array(vals)
+        cols[name] = _split_bytes(buf, _per_list(list_of_doc, nb, n_lists))
+    cols["pos_bin"] = _split_bytes(
+        *_pack_positions(pos, tfs, counts, list_of_doc, local))
+    cols["structs_bin"] = (
+        [b""] * n_lists if structures is None else _split_bytes(
+            np.ascontiguousarray(structures, dtype=np.uint8), cols["cf"]))
+
+    # block-max metadata: blocks of block_size docs tile every list, so
+    # they tile the flat doc arrays in order and reduceat sees each
+    # block as one segment
+    nblocks = (counts + block_size - 1) // block_size
+    blk_off = _offsets(nblocks)
+    blk_list = np.repeat(np.arange(n_lists), nblocks)
+    blk_start = (doc_off[blk_list]
+                 + (np.arange(blk_off[-1]) - blk_off[blk_list]) * block_size)
+    blk_end = np.minimum(blk_start + block_size, doc_off[blk_list + 1])
+    blocks = {
+        "block_doc_lo": ids[blk_start],
+        "block_doc_hi": ids[blk_end - 1],
+        "block_max_tf": (np.maximum.reduceat(tfs, blk_start)
+                         if blk_start.size else blk_start),
+        "block_min_dl": (np.minimum.reduceat(dls, blk_start)
+                         if blk_start.size else blk_start),
+    }
+    bounds = blk_off.tolist()
+    for name, arr in blocks.items():
+        vals = arr.tolist()
+        cols[name] = [vals[a:b] for a, b in zip(bounds[:-1], bounds[1:])]
+    return cols
+
+
+def pack_posting_list(doc_ids, tfs, positions, structures, doc_lens,
+                      block_size=BLOCK_SIZE):
+    """Pack one (term, field) posting list (a batch of one). Inputs
+    sorted by doc_id; returns the row dict of ``pack_posting_lists``."""
+    cols = pack_posting_lists(doc_ids, tfs, positions, structures,
+                              doc_lens, [len(doc_ids)], block_size)
+    row = {k: v[0] for k, v in cols.items()}
+    row["df"], row["cf"] = int(row["df"]), int(row["cf"])
+    return row
+
+
+def _concat(col):
+    """A binary column → (one uint8 buffer, per-row byte offsets)."""
+    parts = list(col)
+    lens = np.fromiter(map(len, parts), dtype=np.int64, count=len(parts))
+    return np.frombuffer(b"".join(parts), dtype=np.uint8), _offsets(lens)
+
+
+def _vb_counts(buf: np.ndarray, offs: np.ndarray) -> np.ndarray:
+    """Number of varbyte values in each [offs[i], offs[i+1]) slice."""
+    ends = _offsets((buf & 0x80) == 0)
+    return ends[offs[1:]] - ends[offs[:-1]]
+
+
+def _unpack_positions(pos_bins, tfs: np.ndarray,
+                      counts: np.ndarray) -> np.ndarray:
+    """Inverse of ``_pack_positions`` over a batch → flat positions."""
+    buf, poff = _concat(pos_bins)
     n_docs = tfs.size
-    if n_docs == 0:
+    if not n_docs:
         return np.empty(0, dtype=np.int64)
-    raw = np.frombuffer(buf, dtype=np.uint8)
-    nflag = (n_docs + 7) // 8
-    nibble = np.unpackbits(raw[:nflag])[:n_docs].astype(bool)
-    off = nflag
-    # section A: first positions (n_docs varbyte values)
-    firsts, consumed = _vb_decode_n(raw[off:], n_docs)
-    off += consumed
-    # section B: nibble bytes
-    nib_len = int(np.frombuffer(raw[off:off + 4].tobytes(), dtype=np.uint32)[0])
-    off += 4
-    nib_bytes = raw[off:off + nib_len]
-    off += nib_len
-    # section C: varbyte deltas for non-nibble docs
-    vb_docs = (~nibble) & (tfs > 1)
-    n_vb_deltas = int((tfs[vb_docs] - 1).sum())
-    vdeltas, _ = _vb_decode_n(raw[off:], n_vb_deltas)
+    doc_off = _offsets(counts)
+    list_of_doc = np.repeat(np.arange(counts.size), counts)
+    local = np.arange(n_docs) - doc_off[list_of_doc]
+    byte = poff[list_of_doc] + local // 8
+    nibble = ((buf[byte] >> (7 - local % 8).astype(np.uint8)) & 1) \
+        .astype(bool)
+
+    # section A ends at its list's counts[i]-th varbyte terminator
+    has = counts > 0
+    a_start = poff[:-1] + (counts + 7) // 8
+    last = (buf & 0x80) == 0
+    term_idx = np.flatnonzero(last)
+    seen = _offsets(last)
+    a_end = a_start.copy()
+    a_end[has] = term_idx[seen[a_start[has]] + counts[has] - 1] + 1
+    nib_len = np.zeros(counts.size, dtype=np.int64)
+    hdr = a_end[has]
+    nib_len[has] = (buf[hdr].astype(np.int64)
+                    | buf[hdr + 1].astype(np.int64) << 8
+                    | buf[hdr + 2].astype(np.int64) << 16
+                    | buf[hdr + 3].astype(np.int64) << 24)
+    n_start = a_end + 4 * has
+    v_start = n_start + nib_len
+    firsts = vb_decode(buf[_ranges(a_start, a_end - a_start)])
+    nib_bytes = buf[_ranges(n_start, nib_len)]
+    vdeltas = vb_decode(buf[_ranges(v_start, poff[1:] - v_start)])
 
     ends = np.cumsum(tfs)
     starts = ends - tfs
     deltas = np.zeros(int(ends[-1]), dtype=np.uint64)
     deltas[starts] = firsts
-    if nibble.any():
-        nib_tf = tfs[nibble] - 1
-        n_bytes = (nib_tf + 1) // 2
-        b_ends = np.cumsum(n_bytes)
-        b_starts = b_ends - n_bytes
-        doc_of_delta = np.repeat(np.arange(nib_tf.size), nib_tf)
+    nib_tf = tfs[nibble] - 1
+    if nib_tf.size:
+        b_starts = _offsets((nib_tf + 1) // 2)[:-1]
         d_ends = np.cumsum(nib_tf)
-        d_starts = d_ends - nib_tf
-        local = np.arange(int(d_ends[-1]) if d_ends.size else 0) - d_starts[doc_of_delta]
-        byte_idx = b_starts[doc_of_delta] + local // 2
-        vals = np.where((local % 2) == 0,
-                        nib_bytes[byte_idx] >> 4,
+        doc_of_delta = np.repeat(np.arange(nib_tf.size), nib_tf)
+        dlocal = np.arange(int(d_ends[-1])) - (d_ends - nib_tf)[doc_of_delta]
+        byte_idx = b_starts[doc_of_delta] + dlocal // 2
+        vals = np.where((dlocal % 2) == 0, nib_bytes[byte_idx] >> 4,
                         nib_bytes[byte_idx] & 0x0F).astype(np.uint64)
-        # scatter into delta slots of nibble docs
-        nib_doc_idx = np.flatnonzero(nibble)
-        tgt = starts[nib_doc_idx][doc_of_delta] + 1 + local
-        deltas[tgt] = vals
-    if n_vb_deltas:
-        vb_doc_idx = np.flatnonzero(vb_docs)
-        vtf = tfs[vb_doc_idx] - 1
+        deltas[starts[nibble][doc_of_delta] + 1 + dlocal] = vals
+    vb_docs = (~nibble) & (tfs > 1)
+    if vdeltas.size:
+        vtf = tfs[vb_docs] - 1
         doc_of = np.repeat(np.arange(vtf.size), vtf)
-        d_ends = np.cumsum(vtf)
-        d_starts = d_ends - vtf
-        local = np.arange(n_vb_deltas) - d_starts[doc_of]
-        tgt = starts[vb_doc_idx][doc_of] + 1 + local
-        deltas[tgt] = vdeltas
+        vlocal = np.arange(vdeltas.size) - (np.cumsum(vtf) - vtf)[doc_of]
+        deltas[starts[vb_docs][doc_of] + 1 + vlocal] = vdeltas
     # per-doc cumsum: global cumsum then subtract previous doc's total
     positions = np.cumsum(deltas, dtype=np.uint64)
     if n_docs > 1:
@@ -174,222 +312,44 @@ def _unpack_positions(buf: bytes, tfs: np.ndarray) -> np.ndarray:
     return positions.astype(np.int64)
 
 
-def _vb_decode_n(raw: np.ndarray, n: int):
-    """Decode exactly n varbyte values from raw; return (vals, bytes used)."""
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), 0
-    is_last = (raw & 0x80) == 0
-    ends = np.flatnonzero(is_last)
-    stop = int(ends[n - 1]) + 1
-    return vb_decode(raw[:stop].tobytes()), stop
-
-
-def _vb_encode_scalar(vals) -> bytes:
-    """Scalar varbyte for short lists — for tiny Zipf-tail runs the
-    Python loop beats the ~10 full-array numpy calls of vb_encode."""
-    out = bytearray()
-    for v in vals:
-        v = int(v)
-        while True:
-            b = v & 0x7F
-            v >>= 7
-            if v:
-                out.append(b | 0x80)
-            else:
-                out.append(b)
-                break
-    return bytes(out)
-
-
-_SMALL_RUN = 64  # below this df, scalar paths win
-
-
-def _pack_small(doc_ids, tfs, positions, structures, doc_lens,
-                block_size):
-    """Scalar fast path for short posting lists (one block)."""
-    n = len(doc_ids)
-    doc_ids = [int(d) for d in doc_ids]
-    tfs = [int(t) for t in tfs]
-    dls = [int(d) for d in doc_lens]
-    pos = [int(p) for p in positions]
-    # doc deltas
-    deltas = [doc_ids[0]] + [doc_ids[i] - doc_ids[i - 1]
-                             for i in range(1, n)]
-    # positions: flag bitmap + firsts + nibble/varbyte sections
-    nibble = []
-    firsts = []
-    nib = bytearray()
-    vb_deltas = []
-    off = 0
-    for i, tf in enumerate(tfs):
-        p = pos[off:off + tf]
-        off += tf
-        firsts.append(p[0])
-        pd = [p[j] - p[j - 1] for j in range(1, tf)]
-        if tf > 1 and all(d < 16 for d in pd):
-            nibble.append(True)
-            for j in range(0, len(pd) - 1, 2):
-                nib.append((pd[j] << 4) | pd[j + 1])
-            if len(pd) % 2:
-                nib.append(pd[-1] << 4)
-        else:
-            nibble.append(False)
-            vb_deltas.extend(pd)
-    flags = bytearray((n + 7) // 8)
-    for i, fl in enumerate(nibble):
-        if fl:
-            flags[i >> 3] |= 0x80 >> (i & 7)
-    pos_bin = (bytes(flags) + _vb_encode_scalar(firsts)
-               + len(nib).to_bytes(4, "little") + bytes(nib)
-               + _vb_encode_scalar(vb_deltas))
-    nblocks = (n + block_size - 1) // block_size
-    lo = [doc_ids[b * block_size] for b in range(nblocks)]
-    hi = [doc_ids[min((b + 1) * block_size, n) - 1]
-          for b in range(nblocks)]
-    bmax = [max(tfs[b * block_size:(b + 1) * block_size])
-            for b in range(nblocks)]
-    bmin = [min(dls[b * block_size:(b + 1) * block_size])
-            for b in range(nblocks)]
-    return {
-        "df": n, "cf": sum(tfs),
-        "docs_bin": _vb_encode_scalar(deltas),
-        "tfs_bin": _vb_encode_scalar(tfs),
-        "dls_bin": _vb_encode_scalar(dls),
-        "pos_bin": pos_bin,
-        "structs_bin": (b"" if structures is None else bytes(
-            bytearray(int(s) for s in structures))),
-        "block_doc_lo": lo, "block_doc_hi": hi,
-        "block_max_tf": bmax, "block_min_dl": bmin,
-    }
-
-
-def pack_posting_list(doc_ids, tfs, positions, structures, doc_lens,
-                      block_size=BLOCK_SIZE):
-    """Pack one (term, field) posting list. Inputs sorted by doc_id.
-
-    Returns a dict with binary columns + block-max arrays (FIXTURES.md §3
-    `segments` schema). Requires no global statistics — the block bound
-    is (max tf, min dl) per block, valid for any avgdl at query time.
-    Short Zipf-tail runs take a scalar fast path; long runs the
-    vectorized numpy path. Both produce identical bytes.
-    """
-    if len(doc_ids) <= _SMALL_RUN and len(positions) <= 4 * _SMALL_RUN:
-        return _pack_small(doc_ids, tfs, positions, structures,
-                           doc_lens, block_size)
-    doc_ids = np.ascontiguousarray(doc_ids, dtype=np.int64)
-    tfs = np.ascontiguousarray(tfs, dtype=np.int64)
-    dls = np.ascontiguousarray(doc_lens, dtype=np.int64)
-    n = doc_ids.size
-    nblocks = (n + block_size - 1) // block_size
-    pad = nblocks * block_size - n
-    lo = doc_ids[::block_size]
-    hi = doc_ids[block_size - 1::block_size]
-    if hi.size < nblocks:
-        hi = np.concatenate([hi, doc_ids[-1:]])
-    tf_pad = np.pad(tfs, (0, pad), constant_values=0)
-    dl_pad = np.pad(dls, (0, pad), constant_values=2**31 - 1)
-    block_max_tf = tf_pad.reshape(nblocks, block_size).max(axis=1)
-    block_min_dl = dl_pad.reshape(nblocks, block_size).min(axis=1)
-    return {
-        "df": int(n),
-        "cf": int(tfs.sum()),
-        "docs_bin": vb_encode(delta_encode(doc_ids.astype(np.uint64))),
-        "tfs_bin": vb_encode(tfs.astype(np.uint64)),
-        "dls_bin": vb_encode(dls.astype(np.uint64)),
-        "pos_bin": _pack_positions(np.asarray(positions), tfs),
-        "structs_bin": (b"" if structures is None else
-                        np.ascontiguousarray(
-                            structures, dtype=np.uint8).tobytes()),
-        "block_doc_lo": lo.tolist(),
-        "block_doc_hi": hi.tolist(),
-        "block_max_tf": block_max_tf.astype(np.int32).tolist(),
-        "block_min_dl": block_min_dl.astype(np.int32).tolist(),
-    }
-
-
-def _vb_decode_scalar(buf: bytes) -> list:
-    out = []
-    v = 0
-    shift = 0
-    for byte in buf:
-        v |= (byte & 0x7F) << shift
-        if byte & 0x80:
-            shift += 7
-        else:
-            out.append(v)
-            v = 0
-            shift = 0
-    return out
-
-
-def unpack_posting_list_small(docs_bin, tfs_bin, pos_bin=None,
-                              structs_bin=None, dls_bin=None):
-    """Scalar decode for short lists (merge-stage hot path). Returns
-    plain Python lists; same values as unpack_posting_list."""
-    deltas = _vb_decode_scalar(docs_bin)
-    doc_ids = []
-    acc = 0
-    for d in deltas:
-        acc += d
-        doc_ids.append(acc)
-    tfs = _vb_decode_scalar(tfs_bin)
-    dls = _vb_decode_scalar(dls_bin) if dls_bin is not None else None
-    positions = None
-    if pos_bin is not None:
-        n = len(tfs)
-        nflag = (n + 7) // 8
-        flags = pos_bin[:nflag]
-        rest = pos_bin[nflag:]
-        vals = _vb_decode_scalar(rest)  # over-decodes; split by counts
-        firsts = vals[:n]
-        # re-scan rest to find byte offset after n varbyte values
-        cnt = 0
-        off = 0
-        for i, byte in enumerate(rest):
-            if not (byte & 0x80):
-                cnt += 1
-                if cnt == n:
-                    off = i + 1
-                    break
-        nib_len = int.from_bytes(rest[off:off + 4], "little")
-        nib = rest[off + 4:off + 4 + nib_len]
-        vb_rest = _vb_decode_scalar(rest[off + 4 + nib_len:])
-        positions = []
-        ni = 0
-        vi = 0
-        for i, tf in enumerate(tfs):
-            p = [firsts[i]]
-            is_nib = bool(flags[i >> 3] & (0x80 >> (i & 7)))
-            if is_nib and tf > 1:
-                nd = []
-                nbytes = (tf - 1 + 1) // 2
-                for b in nib[ni:ni + nbytes]:
-                    nd.append(b >> 4)
-                    nd.append(b & 0x0F)
-                nd = nd[:tf - 1]
-                ni += nbytes
-                for d in nd:
-                    p.append(p[-1] + d)
-            elif tf > 1:
-                for d in vb_rest[vi:vi + tf - 1]:
-                    p.append(p[-1] + d)
-                vi += tf - 1
-            positions.extend(p)
-    structures = structs_bin
-    return doc_ids, tfs, positions, structures, dls
+def unpack_posting_lists(docs_bins, tfs_bins=None, pos_bins=None,
+                         structs_bins=None, dls_bins=None, base=None):
+    """Decode the binary columns of N chunk rows in one pass →
+    (doc_ids, tfs, positions, structures, doc_lens, counts): flat
+    arrays with the lists end to end, ``counts[i]`` docs of row i.
+    Columns passed as None come back as None (positions need tfs).
+    ``base`` (one int per row) is added to the row's doc ids — the
+    O(1)-per-chunk rebase of partition-local or per-shard ids."""
+    buf, offs = _concat(docs_bins)
+    counts = _vb_counts(buf, offs)
+    sums = np.cumsum(vb_decode(buf), dtype=np.uint64)
+    doc_off = _offsets(counts)
+    # per-list delta decode: global running sum minus the sum before
+    # each list's first (absolute) doc id
+    before = np.zeros(counts.size, dtype=np.uint64)
+    nz = doc_off[:-1] > 0
+    before[nz] = sums[doc_off[:-1][nz] - 1]
+    doc_ids = (sums - np.repeat(before, counts)).astype(np.int64)
+    if base is not None:
+        doc_ids += np.repeat(np.asarray(base, dtype=np.int64), counts)
+    tfs = (None if tfs_bins is None
+           else vb_decode(_concat(tfs_bins)[0]).astype(np.int64))
+    positions = (None if pos_bins is None
+                 else _unpack_positions(pos_bins, tfs, counts))
+    structures = (None if structs_bins is None
+                  else np.frombuffer(b"".join(structs_bins), dtype=np.uint8))
+    dls = (None if dls_bins is None
+           else vb_decode(_concat(dls_bins)[0]).astype(np.int64))
+    return doc_ids, tfs, positions, structures, dls, counts
 
 
 def unpack_posting_list(docs_bin, tfs_bin, pos_bin=None, structs_bin=None,
                         dls_bin=None):
-    """Inverse of pack_posting_list →
+    """Inverse of pack_posting_list (a batch of one) →
     (doc_ids, tfs, positions, structures[, doc_lens])."""
-    doc_ids = delta_decode(vb_decode(docs_bin)).astype(np.int64)
-    tfs = vb_decode(tfs_bin).astype(np.int64)
-    positions = (_unpack_positions(pos_bin, tfs)
-                 if pos_bin is not None else None)
-    structures = (np.frombuffer(structs_bin, dtype=np.uint8)
-                  if structs_bin is not None else None)
+    doc_ids, tfs, positions, structures, dls, _ = unpack_posting_lists(
+        *[None if b is None else (b,) for b in
+          (docs_bin, tfs_bin, pos_bin, structs_bin, dls_bin)])
     if dls_bin is None:
         return doc_ids, tfs, positions, structures
-    return doc_ids, tfs, positions, structures, \
-        vb_decode(dls_bin).astype(np.int64)
+    return doc_ids, tfs, positions, structures, dls

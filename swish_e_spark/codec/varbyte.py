@@ -17,18 +17,25 @@ from __future__ import annotations
 import numpy as np
 
 _EMPTY = np.empty(0, dtype=np.uint64)
+# smallest value that needs k + 2 bytes, k = 0..8
+_LIMITS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
 
 
 def vb_encode(values) -> bytes:
     """Encode a 1-D array of non-negative ints to varbyte bytes."""
+    return vb_encode_array(values)[0].tobytes()
+
+
+def vb_encode_array(values):
+    """Varbyte-encode ``values`` → (uint8 array, bytes per value).
+
+    The encoding of a sequence is the concatenation of its values'
+    encodings, so per-value byte counts give the byte boundaries of
+    any run of values (the batch codec's per-list split)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nbytes = np.ones(v.size, dtype=np.int64)
-    tmp = v >> np.uint64(7)
-    while tmp.any():
-        nbytes += tmp > 0
-        tmp >>= np.uint64(7)
+    if not v.size or v.max() < 0x80:  # every value is one byte
+        return v.astype(np.uint8), np.ones(v.size, dtype=np.int64)
+    nbytes = np.searchsorted(_LIMITS, v, side="right") + 1
     ends = np.cumsum(nbytes)
     starts = ends - nbytes
     out = np.zeros(int(ends[-1]), dtype=np.uint8)
@@ -38,14 +45,17 @@ def vb_encode(values) -> bytes:
         byte = ((v[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
         cont = (nbytes[mask] - 1 > j).astype(np.uint8)
         out[idx] = byte | (cont << 7)
-    return out.tobytes()
+    return out, nbytes
 
 
 def vb_decode(buf) -> np.ndarray:
-    """Decode varbyte bytes back to a uint64 array."""
-    b = np.frombuffer(buf, dtype=np.uint8)
+    """Decode varbyte bytes (or a uint8 array) back to a uint64 array."""
+    b = (buf if isinstance(buf, np.ndarray)
+         else np.frombuffer(buf, dtype=np.uint8))
     if b.size == 0:
         return _EMPTY
+    if b.max() < 0x80:  # every value is one byte
+        return b.astype(np.uint64)
     is_last = (b & 0x80) == 0
     ends = np.flatnonzero(is_last)
     starts = np.empty_like(ends)

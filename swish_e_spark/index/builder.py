@@ -17,11 +17,16 @@ Pipeline (one extraction pass per shard, per the north rule):
    rows are packed into compressed chunk rows per (term, field) — the
    analogue of the reference's per-10k-doc chunk coalescing
    (coalesce_word_locations, /root/reference/src/index.c:2811-2994).
-   Head terms thus ship as O(partitions) packed chunks, not O(docs) rows.
+   Every flush packs all its accumulated lists in one batch codec call
+   (``pack_posting_lists``), not one call per list. Head terms thus
+   ship as O(partitions) packed chunks, not O(docs) rows.
 4. **Salted merge shuffle**: chunks shuffle on (term_bucket, salt) where
    heavy partial chunks get a spreading salt and light ones salt 0, so
    Zipf-head terms fan out across reducers while tail-term fragments
    consolidate (two-level combine-then-merge; north rule skew handling).
+   The merge kernel rebases a chunk that stands alone in O(1) (only
+   its first docID delta is absolute) and coalesces small adjacent
+   chunks with one batch unpack and one batch pack per Arrow batch.
 5. **Segment write**: parquet partitioned by term_bucket, rows sorted by
    (term, field, chunk_doc_lo) — term lookups prune on the bucket
    directory plus parquet min/max on term (the Spark equivalent of the
@@ -44,11 +49,12 @@ import time
 import zlib
 from dataclasses import asdict, dataclass
 from functools import cached_property
+from itertools import chain
 
 import numpy as np
 import pandas as pd
 
-from ..codec.postings import pack_posting_list, unpack_posting_list
+from ..codec.postings import pack_posting_lists, unpack_posting_lists
 from ..textproc.extractor import extract
 from ..textproc.pathparts import merge_path_postings
 from ..textproc.tokenizer import TokenizerConfig, tokenize_doc
@@ -293,40 +299,42 @@ def _extract_pack_iter(batches, cfg: IndexConfig):
     (only the first docID delta is absolute)."""
     from pyspark import TaskContext
 
-    from ..codec.postings import BLOCK_SIZE, _pack_small
-
     pid = TaskContext.get().partitionId()
     tok_cfg = cfg.tokenizer_config()
     acc: dict = {}
     local_idx = 0
     since_flush = 0
     def flush_chunks():
-        """Pack every accumulated (field, term) list → columnar chunk
-        frame (column lists, not per-row tuples)."""
+        """Pack every accumulated (field, term) list in ONE batch codec
+        call → columnar chunk frame (column lists, not per-row tuples)."""
         nonlocal since_flush
         n = len(acc)
+        slots = acc.values()
+        counts = np.fromiter((len(s[0]) for s in slots), dtype=np.int64,
+                             count=n)
+        ids = np.fromiter(chain.from_iterable(s[0] for s in slots),
+                          dtype=np.int64, count=int(counts.sum()))
+        packed = pack_posting_lists(
+            ids,
+            np.fromiter(chain.from_iterable(s[1] for s in slots),
+                        dtype=np.int64, count=ids.size),
+            np.fromiter(chain.from_iterable(s[2] for s in slots),
+                        dtype=np.int64),
+            np.frombuffer(b"".join(s[3] for s in slots), dtype=np.uint8),
+            np.fromiter(chain.from_iterable(s[4] for s in slots),
+                        dtype=np.int64, count=ids.size),
+            counts)
+        ends = np.cumsum(counts)
         cols = {c: [None] * n for c in _STAGED_COLS}
         cols["kind"] = [1] * n
         cols["pid"] = [pid] * n
-        for j, ((field, term), slot) in enumerate(acc.items()):
-            ids, tfs, pos, structs, dls = slot
-            if len(ids) <= 64 and len(pos) <= 256:
-                packed = _pack_small(ids, tfs, pos, structs, dls,
-                                     BLOCK_SIZE)
-            else:
-                packed = pack_posting_list(
-                    np.asarray(ids, dtype=np.int64),
-                    np.asarray(tfs, dtype=np.int64),
-                    np.asarray(pos, dtype=np.int64),
-                    np.frombuffer(bytes(structs), dtype=np.uint8),
-                    np.asarray(dls, dtype=np.int64))
-            cols["term_bucket"][j] = term_bucket(term, cfg.n_buckets)
-            cols["term"][j] = term
-            cols["field"][j] = field
-            cols["doc_lo"][j] = ids[0]
-            cols["doc_hi"][j] = ids[-1]
-            for k, v in packed.items():
-                cols[k][j] = v
+        cols["field"] = [f for f, _ in acc]
+        cols["term"] = [t for _, t in acc]
+        cols["term_bucket"] = [term_bucket(t, cfg.n_buckets)
+                               for t in cols["term"]]
+        cols["doc_lo"] = ids[ends - counts]
+        cols["doc_hi"] = ids[ends - 1]
+        cols.update(packed)
         acc.clear()
         since_flush = 0
         return pd.DataFrame(cols, columns=_STAGED_COLS)
@@ -466,76 +474,70 @@ def _extract_pack_iter(batches, cfg: IndexConfig):
 def _rebase_docs_bin(buf, base: int) -> bytes:
     """Add ``base`` to the (absolute) first docID of a packed doc-delta
     stream — O(1) global rebasing of a locally-packed chunk."""
-    from ..codec.postings import _vb_encode_scalar
-
     buf = bytes(buf)
     i = 0
     while buf[i] & 0x80:
         i += 1
     first = 0
-    shift = 0
-    for b in buf[:i + 1]:
-        first |= (b & 0x7F) << shift
-        shift += 7
-    return _vb_encode_scalar([first + base]) + buf[i + 1:]
+    for shift, b in enumerate(buf[:i + 1]):
+        first |= (b & 0x7F) << (7 * shift)
+    first += base
+    head = bytearray()
+    while first >= 0x80:
+        head.append((first & 0x7F) | 0x80)
+        first >>= 7
+    head.append(first)
+    return bytes(head) + buf[i + 1:]
 
 
 def _merge_chunks_iter(batches, cfg: IndexConfig):
     """Stage-4 kernel: partial chunks sorted by (term, field, doc_lo) →
-    coalesced final chunks. Small adjacent chunks are decoded (scalar
-    fast path) and re-packed together; chunks already ≥ chunk_docs/2
-    pass through with an O(1) docID rebase (sort-merge consolidation,
-    the -M merge analogue, /root/reference/src/merge.c:77-400). Rows
-    travel as tuples in _CHUNK_COLS + [base] order; doc_lo/doc_hi and
-    block bound columns are already global (rebased JVM-side); the
-    binary streams carry partition-local ids until here."""
-    from ..codec.postings import unpack_posting_list_small
-
+    coalesced final chunks. Small adjacent chunks of one (term, field)
+    are grouped up to chunk_docs postings, and every multi-chunk group
+    of a batch is decoded and re-packed by ONE batch codec call each
+    way; chunks already ≥ chunk_docs/2 (and lone small ones) pass
+    through with an O(1) docID rebase (sort-merge consolidation, the -M
+    merge analogue, reference src/merge.c). Rows travel as
+    tuples in _CHUNK_COLS + [base] order; doc_lo/doc_hi and block bound
+    columns are already global (rebased JVM-side); the binary streams
+    carry partition-local ids until here."""
     half = cfg.chunk_docs // 2
+    BASE = len(_CHUNK_COLS)  # index of the base column
     key = None
-    buf: list = []
+    buf: list = []  # the open group; may continue into the next batch
     buf_docs = 0
     out: list = []
-    BASE = len(_CHUNK_COLS)  # index of the base column
+    groups: list = []  # (slot in out, rows) of multi-chunk groups
 
     def flush_buf():
         nonlocal buf, buf_docs
-        if not buf:
-            return
         if len(buf) == 1:
             r = buf[0]
             out.append((*r[:7], _rebase_docs_bin(r[7], int(r[BASE])),
                         *r[8:BASE]))
-        else:
-            d_all, t_all, p_all, s_parts, dl_all = [], [], [], [], []
-            for r in buf:
-                base = int(r[BASE])
-                if r[5] <= 64:
-                    d, t, p, s, dl = unpack_posting_list_small(
-                        r[7], r[8], r[10], r[11], r[9])
-                    d_all.extend(x + base for x in d)
-                else:
-                    d, t, p, s, dl = unpack_posting_list(
-                        r[7], r[8], r[10], r[11], r[9])
-                    d_all.extend((d + base).tolist())
-                t_all.extend(t)
-                p_all.extend(p)
-                s_parts.append(bytes(s))
-                dl_all.extend(dl)
-            packed = pack_posting_list(
-                np.asarray(d_all, dtype=np.int64),
-                np.asarray(t_all, dtype=np.int64),
-                np.asarray(p_all, dtype=np.int64),
-                np.frombuffer(b"".join(s_parts), dtype=np.uint8),
-                np.asarray(dl_all, dtype=np.int64))
-            out.append((buf[0][0], buf[0][1], buf[0][2],
-                        int(d_all[0]), int(d_all[-1]),
-                        packed["df"], packed["cf"], packed["docs_bin"],
-                        packed["tfs_bin"], packed["dls_bin"],
-                        packed["pos_bin"], packed["structs_bin"],
-                        packed["block_doc_lo"], packed["block_doc_hi"],
-                        packed["block_max_tf"], packed["block_min_dl"]))
+        elif buf:
+            groups.append((len(out), buf))
+            out.append(None)
         buf, buf_docs = [], 0
+
+    def repack_groups():
+        """Fill the ``out`` slots of this batch's groups: one unpack of
+        all their chunks (rebased), one pack of the merged lists."""
+        rows = [r for _, g in groups for r in g]
+        d, t, p, s, dl, counts = unpack_posting_lists(
+            *[[r[i] for r in rows] for i in (7, 8, 10, 11, 9)],
+            base=[int(r[BASE]) for r in rows])
+        sizes = np.fromiter((len(g) for _, g in groups), dtype=np.int64,
+                            count=len(groups))
+        gcounts = np.add.reduceat(counts, np.cumsum(sizes) - sizes)
+        packed = pack_posting_lists(d, t, p, s, dl, gcounts)
+        ends = np.cumsum(gcounts)
+        lo, hi = d[ends - gcounts].tolist(), d[ends - 1].tolist()
+        cols = [packed[c] for c in _CHUNK_COLS[5:]]
+        for j, (slot, g) in enumerate(groups):
+            out[slot] = (*g[0][:3], lo[j], hi[j],
+                         *(c[j] for c in cols))
+        groups.clear()
 
     in_cols = _CHUNK_COLS + ["base"]
     for pdf in batches:
@@ -556,10 +558,15 @@ def _merge_chunks_iter(batches, cfg: IndexConfig):
                 flush_buf()
             buf.append(rec)
             buf_docs += df
-        if len(out) >= 256:
+        if groups:
+            repack_groups()
+        # the open group's slot comes after everything emitted so far
+        if out:
             yield pd.DataFrame(out, columns=_CHUNK_COLS)
             out = []
     flush_buf()
+    if groups:
+        repack_groups()
     if out:
         yield pd.DataFrame(out, columns=_CHUNK_COLS)
 
@@ -843,9 +850,10 @@ def _build_shard(spark, shard_df, out_dir, cfg: IndexConfig,
     # empty url range) writes zero data files, and inference would fail
     staged = spark.read.schema(STAGED_SCHEMA).parquet(stage_tmp)
 
+    mark("extract")  # the staged extract+pack write
+
     # dense doc_id = doc_base + offset[pid] + local_idx, offsets computed
     # over the staged output (exact, partitioner-independent)
-    mark("plan")
     stat_rows = (staged.groupBy("kind", "pid")
                  .agg(F.count("*").alias("cnt"),
                       F.sum("doc_len").alias("tok"),
@@ -855,7 +863,7 @@ def _build_shard(spark, shard_df, out_dir, cfg: IndexConfig,
                           if r["kind"] == 0))
     posting_count = int(sum(r["post"] or 0 for r in stat_rows
                             if r["kind"] == 1))
-    mark("extract+counts")
+    mark("counts")
     offsets, acc = {}, doc_base
     for pid in sorted(counts):
         offsets[pid] = acc

@@ -37,7 +37,13 @@ import json
 import os
 import shutil
 
+import numpy as np
+import pandas as pd
+
+from ..codec.postings import pack_posting_lists, unpack_posting_lists
 from .builder import (
+    _CHUNK_COLS,
+    CHUNK_SCHEMA,
     DOCS_SCHEMA,
     IndexConfig,
     IndexHandle,
@@ -50,6 +56,7 @@ from .builder import (
     check_not_raced,
     commit_manifest,
     list_snapshots,
+    term_bucket,
 )
 
 REMOVED_SCHEMA = "doc_id long, url string"
@@ -225,13 +232,9 @@ def compact_index(spark, index_dir: str):
     identical. The reference's merge writes a fully renumbered index
     (/root/reference/src/merge.c:77-400); at 100 TB an id-preserving
     rewrite avoids the extra doc-id remap shuffle."""
-    import numpy as np
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from ..codec.postings import pack_posting_list
     from ..query.executor import DECODED_SCHEMA, _decode_kernel
-    from .builder import CHUNK_SCHEMA, _CHUNK_COLS, term_bucket
 
     handle = IndexHandle(spark, index_dir)
     cfg = handle.cfg
@@ -252,9 +255,10 @@ def compact_index(spark, index_dir: str):
     n_removed = removed.count() if removed is not None else 0
     # two physical strategies, one semantic result:
     # - CHUNK-LEVEL (default): shuffle the already-PACKED chunk bytes
-    #   co-located by term, then decode→filter→re-pack each (term,
-    #   field) group with pure-numpy kernels. The shuffle moves compact
-    #   binaries (the build-merge shape), never 1 row per posting —
+    #   co-located by term bucket, then decode→filter→re-pack each
+    #   batch's (term, field) groups with one batch codec call each
+    #   way. The shuffle moves compact binaries (the build-merge
+    #   shape), never 1 row per posting —
     #   at 1M docs this is the difference between a compact that costs
     #   a fraction of a build and one that costs 4.5 builds (r5 bench).
     #   Tombstones ride to executors as a sorted numpy array; their
@@ -320,82 +324,40 @@ def compact_index(spark, index_dir: str):
     chunk_docs = cfg.chunk_docs
 
     def repack(batches):
-        """Whole-batch repack: group boundaries via numpy over the
-        sorted (term, field, doc_id) stream, one pack_posting_list per
-        chunk_docs-sized group slice — no per-row Python (round-1
-        verdict: the itertuples loop here would crawl at scale). Rows
-        of an unfinished trailing group carry over to the next batch
-        (full chunk_docs chunks are emitted eagerly, so the carry is
-        bounded by chunk_docs)."""
-        out = []
+        """Whole-batch repack of the sorted (term, field, doc_id) row
+        stream: group boundaries via numpy, then ONE pack call for every
+        chunk_docs-sized group slice of the batch. The batch's last
+        group emits only full chunks; its remainder carries over to the
+        next batch, which continues the same chunk count."""
         carry = None
-
-        def emit(pdf, a, b, key):
-            """Pack rows [a:b) of pdf — one (term, field) chunk."""
-            pos_arrs = list(pdf["positions"].iloc[a:b])
-            packed = pack_posting_list(
-                pdf["doc_id"].to_numpy(np.int64)[a:b],
-                pdf["tf"].to_numpy(np.int64)[a:b],
-                np.concatenate(pos_arrs).astype(np.int64)
-                if pos_arrs else np.empty(0, np.int64),
-                np.frombuffer(b"".join(bytes(x) for x in
-                                       pdf["structs"].iloc[a:b]),
-                              dtype=np.uint8),
-                pdf["dl"].to_numpy(np.int64)[a:b])
-            docs = pdf["doc_id"].to_numpy(np.int64)
-            out.append((term_bucket(key[0], n_buckets), key[0], key[1],
-                        int(docs[a]), int(docs[b - 1]), packed["df"],
-                        packed["cf"], packed["docs_bin"],
-                        packed["tfs_bin"], packed["dls_bin"],
-                        packed["pos_bin"], packed["structs_bin"],
-                        packed["block_doc_lo"], packed["block_doc_hi"],
-                        packed["block_max_tf"], packed["block_min_dl"]))
-
-        def process(pdf, final):
-            nonlocal carry
+        for pdf in batches:
             if carry is not None:
                 pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            n = len(pdf)
-            if not n:
-                return
-            terms = pdf["term"].to_numpy()
-            fields = pdf["field"].to_numpy()
-            new = np.ones(n, dtype=bool)
-            new[1:] = (terms[1:] != terms[:-1]) \
-                | (fields[1:] != fields[:-1])
-            starts = np.flatnonzero(new)
-            ends = np.r_[starts[1:], n]
-            for gi in range(len(starts)):
-                a, b = int(starts[gi]), int(ends[gi])
-                key = (terms[a], fields[a])
-                last_group = gi == len(starts) - 1
-                if not final and last_group:
-                    # emit only full chunks; carry the remainder so the
-                    # next batch continues the same chunk count
-                    full_end = a + ((b - a) // chunk_docs) * chunk_docs
-                    for c in range(a, full_end, chunk_docs):
-                        emit(pdf, c, c + chunk_docs, key)
-                    if full_end < b:
-                        carry = pdf.iloc[full_end:b]
-                else:
-                    for c in range(a, b, chunk_docs):
-                        emit(pdf, c, min(c + chunk_docs, b), key)
+            new = _group_starts(pdf)
+            last = int(np.flatnonzero(new)[-1]) if len(pdf) else 0
+            cut = last + (len(pdf) - last) // chunk_docs * chunk_docs
+            carry = pdf.iloc[cut:] if cut < len(pdf) else None
+            if cut:
+                yield _repack_rows(pdf.iloc[:cut], new[:cut])
+        if carry is not None and len(carry):
+            yield _repack_rows(carry, _group_starts(carry))
 
-        for pdf in batches:
-            process(pdf, final=False)
-            if len(out) >= 256:
-                yield pd.DataFrame(out, columns=_CHUNK_COLS)
-                out = []
-        if carry is not None:
-            tail, carry = carry, None
-            process(tail.reset_index(drop=True), final=True)
-        if out:
-            yield pd.DataFrame(out, columns=_CHUNK_COLS)
+    def _repack_rows(pdf, new):
+        first = np.flatnonzero(new)
+        pos = list(pdf["positions"])
+        return _chunk_frame(
+            pdf["term"].to_numpy()[first], pdf["field"].to_numpy()[first],
+            np.diff(np.r_[first, len(pdf)]),
+            pdf["doc_id"].to_numpy(np.int64), pdf["tf"].to_numpy(np.int64),
+            np.concatenate(pos) if pos else np.empty(0, np.int64),
+            np.frombuffer(b"".join(pdf["structs"]), dtype=np.uint8),
+            pdf["dl"].to_numpy(np.int64), n_buckets, chunk_docs)
 
-    n_reduce = max(n_buckets, 8)
+    # one reducer per term bucket (a term maps to one bucket), so the
+    # partitioned write below makes one file per bucket directory
     compacted = (decoded
-                 .repartition(n_reduce, "term")
+                 .repartition(n_buckets, F.pmod(F.crc32("term"),
+                                                F.lit(n_buckets)))
                  .sortWithinPartitions("term", "field", "doc_id")
                  .mapInPandas(repack, schema=CHUNK_SCHEMA))
 
@@ -420,8 +382,6 @@ def _finalize_compact(spark, index_dir: str, meta: dict, compacted,
     generation shard and commit the manifest."""
     from pyspark.sql import functions as F
 
-    from .builder import CHUNK_SCHEMA as _CS
-
     seg_tmp = os.path.join(index_dir, "_tmp_compact_segments")
     compacted.write.mode("overwrite").partitionBy("term_bucket") \
         .parquet(seg_tmp)
@@ -431,7 +391,7 @@ def _finalize_compact(spark, index_dir: str, meta: dict, compacted,
     live.write.mode("overwrite").parquet(docs_tmp)
 
     terms_tmp = os.path.join(index_dir, "_tmp_compact_terms")
-    (spark.read.schema(_CS).parquet(seg_tmp)
+    (spark.read.schema(CHUNK_SCHEMA).parquet(seg_tmp)
      .groupBy("term_bucket", "term", "field")
      .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
      .sortWithinPartitions("term")
@@ -467,26 +427,52 @@ def _finalize_compact(spark, index_dir: str, meta: dict, compacted,
     return meta
 
 
+def _group_starts(pdf) -> np.ndarray:
+    """True at the first row of each (term, field) run of a frame
+    sorted by (term, field)."""
+    terms = pdf["term"].to_numpy()
+    fields = pdf["field"].to_numpy()
+    new = np.ones(len(pdf), dtype=bool)
+    new[1:] = (terms[1:] != terms[:-1]) | (fields[1:] != fields[:-1])
+    return new
+
+
+def _chunk_frame(terms, fields, gcounts, doc_ids, tfs, pos, sts, dls,
+                 n_buckets: int, chunk_docs: int):
+    """Flat postings of (term, field) groups (``gcounts[g]`` docs of
+    group g, end to end) → chunk-row frame: each group split into
+    chunks of chunk_docs postings (an empty group vanishes), every
+    chunk packed by ONE batch codec call."""
+    nchunks = (gcounts + chunk_docs - 1) // chunk_docs
+    grp = np.repeat(np.arange(len(gcounts)), nchunks)
+    k = np.arange(len(grp)) - np.repeat(np.cumsum(nchunks) - nchunks,
+                                        nchunks)
+    counts = np.minimum(gcounts[grp] - k * chunk_docs, chunk_docs)
+    ends = np.cumsum(counts)
+    buckets = np.fromiter((term_bucket(t, n_buckets) for t in terms),
+                          dtype=np.int64, count=len(terms))
+    cols = {"term_bucket": buckets[grp], "term": terms[grp],
+            "field": fields[grp], "doc_lo": doc_ids[ends - counts],
+            "doc_hi": doc_ids[ends - 1]}
+    cols.update(pack_posting_lists(doc_ids, tfs, pos, sts, dls, counts))
+    return pd.DataFrame(cols, columns=_CHUNK_COLS)
+
+
 _TOMBSTONE_DRIVER_CAP = 20_000_000  # ~160 MB of int64 on the driver
 
 
 def _compact_chunkwise(spark, index_dir, handle, cfg, meta, scan,
                        removed, n_removed):
     """Chunk-level compact: the shuffle co-locates PACKED chunk rows by
-    term (compact binaries, the build-merge shape — never one row per
-    posting), then each (term, field) group decodes, drops tombstoned
-    docs, and re-packs with pure-numpy kernels. Semantically identical
-    to the decoded-row path (engine_lifecycle_match + test_lifecycle
+    term bucket (compact binaries, the build-merge shape — never one
+    row per posting; one reducer, hence one written file, per bucket),
+    then each batch's (term, field) groups decode, drop tombstoned
+    docs, and re-pack in one batch codec call each way. Semantically
+    identical to the decoded-row path (engine_lifecycle_match + test_lifecycle
     pin query identity); physically it skips materializing 1 pandas
     row + 1 Arrow position array per posting on BOTH sides of the
     shuffle — the r5 1M-doc bench had the row path costing 4.5 full
     builds, dominated by exactly that."""
-    import numpy as np
-    import pandas as pd
-
-    from ..codec.postings import pack_posting_list, unpack_posting_list
-    from .builder import CHUNK_SCHEMA, _CHUNK_COLS, term_bucket
-
     removed_ids = None
     if n_removed:
         removed_ids = np.sort(np.array(
@@ -496,106 +482,58 @@ def _compact_chunkwise(spark, index_dir, handle, cfg, meta, scan,
     chunk_docs = cfg.chunk_docs
 
     def repack_chunks(batches):
-        out = []
-        carry: list = []  # (term, field) group split across batches
-
-        def flush_group(rows):
-            docs_l, tfs_l, pos_l, st_l, dls_l = [], [], [], [], []
-            for rec in rows:  # already in global doc order
-                d, t, p, s, dl = unpack_posting_list(
-                    rec["docs_bin"], rec["tfs_bin"], rec["pos_bin"],
-                    rec["structs_bin"], rec["dls_bin"])
-                base = int(rec["base"] or 0)
-                if base:
-                    d = d + base
-                docs_l.append(d)
-                tfs_l.append(t)
-                pos_l.append(p)
-                st_l.append(s)
-                dls_l.append(dl)
-            doc_ids = np.concatenate(docs_l)
-            tfs = np.concatenate(tfs_l)
-            pos = np.concatenate(pos_l)
-            sts = np.concatenate(st_l)
-            dls = np.concatenate(dls_l)
-            if removed_ids is not None and len(doc_ids):
-                idx = np.searchsorted(removed_ids, doc_ids)
-                inb = idx < len(removed_ids)
-                hit = np.zeros(len(doc_ids), dtype=bool)
-                hit[inb] = removed_ids[idx[inb]] == doc_ids[inb]
-                if hit.any():
-                    keep = ~hit
-                    pk = np.repeat(keep, tfs)
-                    pos = pos[pk]
-                    sts = sts[pk]
-                    doc_ids = doc_ids[keep]
-                    tfs = tfs[keep]
-                    dls = dls[keep]
-            n = len(doc_ids)
-            if not n:
-                return  # every doc tombstoned: the term row vanishes
-            ends = np.cumsum(tfs)
-            starts = ends - tfs
-            term, field = rows[0]["term"], rows[0]["field"]
-            tb = term_bucket(term, n_buckets)
-            for a in range(0, n, chunk_docs):
-                b = min(a + chunk_docs, n)
-                packed = pack_posting_list(
-                    doc_ids[a:b], tfs[a:b],
-                    pos[starts[a]:ends[b - 1]],
-                    sts[starts[a]:ends[b - 1]],
-                    dls[a:b])
-                out.append((tb, term, field,
-                            int(doc_ids[a]), int(doc_ids[b - 1]),
-                            packed["df"], packed["cf"],
-                            packed["docs_bin"], packed["tfs_bin"],
-                            packed["dls_bin"], packed["pos_bin"],
-                            packed["structs_bin"],
-                            packed["block_doc_lo"],
-                            packed["block_doc_hi"],
-                            packed["block_max_tf"],
-                            packed["block_min_dl"]))
-
+        """Per batch, ONE unpack of every complete (term, field) group's
+        chunks and one pack of the surviving postings. The batch's last
+        group may continue in the next batch, so its rows carry over."""
+        carry = None
         for pdf in batches:  # sorted by (term, field, base + doc_lo)
-            recs = pdf.to_dict("records")  # one dict per CHUNK
-            i = 0
-            while i < len(recs):
-                j = i
-                key = (recs[i]["term"], recs[i]["field"])
-                while j < len(recs) and (recs[j]["term"],
-                                         recs[j]["field"]) == key:
-                    j += 1
-                if carry and (carry[0]["term"],
-                              carry[0]["field"]) == key:
-                    carry.extend(recs[i:j])
-                    group = None if j == len(recs) else carry
-                    if group is not None:
-                        flush_group(group)
-                        carry = []
-                elif j == len(recs):
-                    # trailing group may continue in the next batch
-                    if carry:
-                        flush_group(carry)
-                    carry = recs[i:j]
-                else:
-                    if carry:
-                        flush_group(carry)
-                        carry = []
-                    flush_group(recs[i:j])
-                i = j
-            if len(out) >= 128:
-                yield pd.DataFrame(out, columns=_CHUNK_COLS)
-                out = []
-        if carry:
-            flush_group(carry)
-        if out:
-            yield pd.DataFrame(out, columns=_CHUNK_COLS)
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            new = _group_starts(pdf)
+            cut = int(np.flatnonzero(new)[-1]) if len(pdf) else 0
+            carry = pdf.iloc[cut:]
+            if cut:
+                yield _repack_chunk_rows(pdf.iloc[:cut], new[:cut])
+        if carry is not None and len(carry):
+            yield _repack_chunk_rows(carry, _group_starts(carry))
+
+    def _repack_chunk_rows(pdf, new):
+        """Chunk rows of whole (term, field) groups (``new`` marks each
+        group's first row) → re-packed chunk frame, tombstoned docs
+        dropped, chunk_docs postings per chunk."""
+        doc_ids, tfs, pos, sts, dls, counts = unpack_posting_lists(
+            pdf["docs_bin"], pdf["tfs_bin"], pdf["pos_bin"],
+            pdf["structs_bin"], pdf["dls_bin"],
+            base=pdf["base"].to_numpy(np.int64))
+        group_of_doc = np.repeat(np.cumsum(new) - 1, counts)
+        if removed_ids is not None and len(doc_ids):
+            idx = np.searchsorted(removed_ids, doc_ids)
+            inb = idx < len(removed_ids)
+            hit = np.zeros(len(doc_ids), dtype=bool)
+            hit[inb] = removed_ids[idx[inb]] == doc_ids[inb]
+            if hit.any():
+                keep = ~hit
+                pk = np.repeat(keep, tfs)
+                pos = pos[pk]
+                sts = sts[pk]
+                doc_ids = doc_ids[keep]
+                tfs = tfs[keep]
+                dls = dls[keep]
+                group_of_doc = group_of_doc[keep]
+        # every doc tombstoned: the group's term row vanishes
+        gcounts = np.bincount(group_of_doc, minlength=int(new.sum()))
+        first = np.flatnonzero(new)
+        return _chunk_frame(pdf["term"].to_numpy()[first],
+                            pdf["field"].to_numpy()[first], gcounts,
+                            doc_ids, tfs, pos, sts, dls, n_buckets,
+                            chunk_docs)
 
     from pyspark.sql import functions as F
 
-    n_reduce = max(n_buckets, 8)
+    # one reducer per term bucket (a term maps to one bucket, so each
+    # (term, field) group stays in one partition)
     compacted = (scan
-                 .repartition(n_reduce, "term")
+                 .repartition(n_buckets, "term_bucket")
                  .sortWithinPartitions(
                      "term", "field",
                      (F.col("base") + F.col("doc_lo")))
@@ -646,24 +584,14 @@ def apply_ignore_limit(spark, index_dir: str, plimit: float = 101.0,
         # disjoint docs, fields within a shard overlap) and unique
         # them. Candidates are by definition few head terms, so the
         # decode touches a handful of terms' postings only.
-        import pandas as pd
-
         def distinct_docs(key, pdf):
-            import numpy as np
-
-            from ..codec.postings import unpack_posting_list
-
-            parts = [unpack_posting_list(r.docs_bin, r.tfs_bin, None,
-                                         None, r.dls_bin)[0]
-                     for r in pdf.itertuples(index=False)]
-            n = int(len(np.unique(np.concatenate(parts)))) \
-                if parts else 0
-            return pd.DataFrame({"term": [key[0]], "n": [n]})
+            doc_ids = unpack_posting_lists(pdf["docs_bin"])[0]
+            return pd.DataFrame({"term": [key[0]],
+                                 "n": [len(np.unique(doc_ids))]})
 
         per_shard = (handle.segments()
                      .filter(F.col("term").isin(cand))
-                     .select("term", "shard", "docs_bin", "tfs_bin",
-                             "dls_bin")
+                     .select("term", "shard", "docs_bin")
                      .groupBy("term", "shard")
                      .applyInPandas(distinct_docs,
                                     "term string, n long"))
@@ -732,6 +660,14 @@ def remove_documents_df(spark, index_dir: str, urls_df):
     return n
 
 
+def _parquet_rows(path: str) -> int:
+    """Row count of a parquet directory, read from the file footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(os.path.join(path, f)).num_rows
+               for f in os.listdir(path) if f.endswith(".parquet"))
+
+
 def update_documents(spark, pages_df, index_dir: str):
     """Incremental update (-u): index ``pages_df`` as a NEW shard and
     tombstone any existing docs with the same urls (replace semantics,
@@ -781,10 +717,12 @@ def update_documents(spark, pages_df, index_dir: str):
     # forward (merge staging, finalize manifest) without ever having
     # to delete rows out of the append-only removed/ table
     staging = os.path.join(index_dir, f"_removed_staging_{shard_id}")
-    n_replaced = superseded.count()
-    if n_replaced:
-        (superseded.select("doc_id", "url")
-         .write.mode("overwrite").parquet(staging))
+    superseded.write.mode("overwrite").parquet(staging)
+    # the row count comes from the staged files' parquet footers: the
+    # superseded join runs once, as the staging write
+    n_replaced = _parquet_rows(staging)
+    if not n_replaced:
+        shutil.rmtree(staging)  # a refresh that replaced nothing
     _atomic_write_json(
         os.path.join(_manifest_dir(index_dir), f"shard_{shard_id}.json"),
         sm)

@@ -63,9 +63,9 @@ DECODED_SCHEMA = ("field string, term string, doc_id long, tf long, "
 
 def _decode_kernel(batches, need_positions: bool, structure_mask,
                    need_structs: bool = False, allow_docs=None):
-    """Arrow-batched chunk decode → per-posting rows. ``base`` column
-    (merged-index doc rebase, index/maintenance.py) is added to decoded
-    doc ids when present.
+    """Arrow-batched chunk decode → per-posting rows, one batch codec
+    call per batch. ``base`` column (merged-index doc rebase,
+    index/maintenance.py) is added to decoded doc ids when present.
 
     ``allow_docs`` (sorted global doc ids) restricts the output to
     those docs BEFORE per-doc position arrays are materialized — for a
@@ -77,82 +77,57 @@ def _decode_kernel(batches, need_positions: bool, structure_mask,
     the filter (scores unchanged)."""
     import numpy as np
 
-    from ..codec.postings import unpack_posting_list
+    from ..codec.postings import unpack_posting_lists
 
+    want_pos = need_positions or structure_mask is not None
+    want_structs = need_structs or structure_mask is not None
     for pdf in batches:
-        # per-column parts, assembled into ONE frame per batch: a
-        # pd.concat of per-chunk frames re-checks every None of the
-        # object columns and cost more than the decode itself
-        keys, counts, ids, tfl, dll, posl, stl = [], [], [], [], [], [], []
-        for rec in pdf.to_dict("records"):
-            doc_ids, tfs, positions, structs, dls = unpack_posting_list(
-                rec["docs_bin"], rec["tfs_bin"],
-                rec["pos_bin"] if (need_positions or
-                                   structure_mask is not None) else None,
-                rec["structs_bin"] if (structure_mask is not None
-                                       or need_structs) else None,
-                rec["dls_bin"])
-            rebase = int(rec.get("base") or 0)
-            if rebase:
-                doc_ids = doc_ids + rebase
-            if allow_docs is not None and len(doc_ids):
-                idx = np.searchsorted(allow_docs, doc_ids)
-                inb = idx < len(allow_docs)
-                sel = np.zeros(len(doc_ids), dtype=bool)
-                sel[inb] = allow_docs[idx[inb]] == doc_ids[inb]
-                if not sel.any():
-                    continue
-                if not sel.all():
-                    if positions is not None or structs is not None:
-                        pk = np.repeat(sel, tfs)
-                        if positions is not None:
-                            positions = positions[pk]
-                        if structs is not None:
-                            structs = structs[pk]
-                    doc_ids, tfs, dls = \
-                        doc_ids[sel], tfs[sel], dls[sel]
-            if structure_mask is not None:
-                keep = (structs & structure_mask) != 0
-                ends = np.cumsum(tfs)
-                starts = ends - tfs
-                new_tfs = np.add.reduceat(
-                    keep.astype(np.int64), starts) if len(tfs) else tfs
-                # reduceat quirk: empty segments at same start repeat —
-                # tfs>=1 always here so starts strictly increase
-                sel = new_tfs > 0
-                positions = positions[keep]
+        if not len(pdf):
+            continue
+        doc_ids, tfs, positions, structs, dls, counts = \
+            unpack_posting_lists(
+                pdf["docs_bin"], pdf["tfs_bin"],
+                pdf["pos_bin"] if want_pos else None,
+                pdf["structs_bin"] if want_structs else None,
+                pdf["dls_bin"],
+                base=(pdf["base"].to_numpy(np.int64)
+                      if "base" in pdf.columns else None))
+        row_of_doc = np.repeat(np.arange(len(pdf)), counts)
+        if allow_docs is not None and len(doc_ids):
+            idx = np.searchsorted(allow_docs, doc_ids)
+            inb = idx < len(allow_docs)
+            sel = np.zeros(len(doc_ids), dtype=bool)
+            sel[inb] = allow_docs[idx[inb]] == doc_ids[inb]
+            if not sel.all():
+                pk = np.repeat(sel, tfs)
+                if positions is not None:
+                    positions = positions[pk]
                 if structs is not None:
-                    structs = structs[keep]
-                doc_ids, tfs, dls = doc_ids[sel], new_tfs[sel], dls[sel]
-                if not len(doc_ids):
-                    continue
-                tfs_for_split = tfs
-            else:
-                tfs_for_split = tfs
-            n = len(doc_ids)
-            keys.append((rec["field"], rec["term"]))
-            counts.append(n)
-            ids.append(doc_ids)
-            tfl.append(tfs_for_split)
-            dll.append(dls)
-            split_at = np.cumsum(tfs_for_split)[:-1]
-            if need_positions and positions is not None:
-                posl.extend(np.split(positions.astype(np.int32), split_at))
-            else:
-                posl.extend([None] * n)
-            if need_structs and structs is not None:
-                stl.extend(a.tobytes() for a in np.split(structs, split_at))
-            else:
-                stl.extend([None] * n)
-        if keys:
-            yield pd.DataFrame({
-                "field": np.repeat(np.array([f for f, _ in keys],
-                                            dtype=object), counts),
-                "term": np.repeat(np.array([t for _, t in keys],
-                                           dtype=object), counts),
-                "doc_id": np.concatenate(ids), "tf": np.concatenate(tfl),
-                "dl": np.concatenate(dll), "positions": posl,
-                "structs": stl})
+                    structs = structs[pk]
+                doc_ids, tfs, dls, row_of_doc = \
+                    doc_ids[sel], tfs[sel], dls[sel], row_of_doc[sel]
+        if structure_mask is not None and len(doc_ids):
+            keep = (structs & structure_mask) != 0
+            # tfs >= 1, so the per-doc segment starts strictly increase
+            new_tfs = np.add.reduceat(keep.astype(np.int64),
+                                      np.cumsum(tfs) - tfs)
+            sel = new_tfs > 0
+            positions = positions[keep]
+            structs = structs[keep]
+            doc_ids, tfs, dls, row_of_doc = \
+                doc_ids[sel], new_tfs[sel], dls[sel], row_of_doc[sel]
+        n = len(doc_ids)
+        if not n:
+            continue
+        split_at = np.cumsum(tfs)[:-1]
+        yield pd.DataFrame({
+            "field": pdf["field"].to_numpy()[row_of_doc],
+            "term": pdf["term"].to_numpy()[row_of_doc],
+            "doc_id": doc_ids, "tf": tfs, "dl": dls,
+            "positions": (np.split(positions.astype(np.int32), split_at)
+                          if need_positions else [None] * n),
+            "structs": ([a.tobytes() for a in np.split(structs, split_at)]
+                        if need_structs else [None] * n)})
 
 
 def _wand_block_kernel(batches, prune: dict, theta: float,
