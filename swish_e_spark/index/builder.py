@@ -282,6 +282,7 @@ def doctype_of_url(url: str) -> str:
 
 _CHUNK_COLS = [c.rsplit(" ", 1)[0].split(" ")[0].strip()
                for c in CHUNK_SCHEMA.split(", ")]
+_INT_CHUNK_COLS = {"term_bucket", "doc_lo", "doc_hi", "df", "cf"}
 _STAGED_COLS = [c.rsplit(" ", 1)[0].split(" ")[0].strip()
                 for c in STAGED_SCHEMA.split(", ")]
 _N_DOC_COLS = 12  # kind..extra_pos prefix of STAGED_SCHEMA
@@ -490,6 +491,16 @@ def _rebase_docs_bin(buf, base: int) -> bytes:
     return bytes(head) + buf[i + 1:]
 
 
+def _rows_frame(rows) -> pd.DataFrame:
+    """Chunk-row tuples (_CHUNK_COLS order) → frame, built one typed
+    column at a time: pandas' per-row object inference of a tuple list
+    costs more than the merge kernel's codec calls."""
+    return pd.DataFrame({
+        c: (np.array(v, dtype=np.int64) if c in _INT_CHUNK_COLS
+            else pd.Series(v, dtype=object))
+        for c, v in zip(_CHUNK_COLS, zip(*rows))})
+
+
 def _merge_chunks_iter(batches, cfg: IndexConfig):
     """Stage-4 kernel: partial chunks sorted by (term, field, doc_lo) →
     coalesced final chunks. Small adjacent chunks of one (term, field)
@@ -562,13 +573,13 @@ def _merge_chunks_iter(batches, cfg: IndexConfig):
             repack_groups()
         # the open group's slot comes after everything emitted so far
         if out:
-            yield pd.DataFrame(out, columns=_CHUNK_COLS)
+            yield _rows_frame(out)
             out = []
     flush_buf()
     if groups:
         repack_groups()
     if out:
-        yield pd.DataFrame(out, columns=_CHUNK_COLS)
+        yield _rows_frame(out)
 
 
 # --------------------------------------------------------------------

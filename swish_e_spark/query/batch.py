@@ -1,21 +1,26 @@
 """The query evaluator: one kernel behind every engine path.
 
 Every Spark-side evaluation (``search_batch``, the exhaustive
-``search_df``, ``match_df`` and the evaluation step of both WAND
-planners) runs ``evaluate``/``score_decoded`` below, and the resident
-``search()`` calls the same ``_batch_kernel`` as a single partition.
+``search_df``, ``match_df``, the evaluation step of both WAND planners
+and the swish-e ranks of schemes 0/1, ``swishrank.spark_swish_search``)
+runs ``evaluate``/``score_decoded`` below, and the resident ``search()``
+calls the same ``_batch_kernel`` as a single partition. A ranking
+(``Bm25`` here, ``swishrank.SwishRank``) enters at two points: each
+row's leaf score and the rule that combines AND/NEAR sides and phrase
+words.
 The Spark shape amortizes the per-query fixed cost over a battery:
 
 1. ONE partition-pruned segment scan covering the union of every
    query's leaves (terms + expanded prefixes/patterns),
 2. ONE decode pass (positions only if some query is positional),
 3. ONE shuffle co-locating each doc's leaf rows,
-4. a per-partition evaluation kernel: non-positional queries (Term /
-   Prefix / Pattern / AND / OR / AND-NOT / NOT) evaluate as numpy
-   column arithmetic over factorized (doc, leaf) codes — zero Python
-   per doc; queries with phrase/NEAR nodes fall back to a per-doc AST
-   walk (the reference's DAAT loop, src/search.c:2249-2637) restricted
-   to the docs that contain at least one of their leaves,
+4. a per-partition evaluation kernel: under BM25, non-positional
+   queries (Term / Prefix / Pattern / AND / OR / AND-NOT / NOT)
+   evaluate as numpy column arithmetic over factorized (doc, leaf)
+   codes — zero Python per doc; queries with phrase/NEAR nodes, and
+   every query under swish ranks, take a per-doc AST walk (the
+   reference's DAAT loop, src/search.c:2249-2637) restricted to the
+   docs that contain at least one of their leaves,
 5. per-partition top-k (or every match when k is None), then one tiny
    per-query merge.
 
@@ -98,25 +103,69 @@ def _query_leaves(node, expansions) -> set:
     return set()
 
 
-def _impact(tf: float, dl: float, avgdl: float) -> float:
-    # identical float64 expression to oracle.engine.bm25_impact_scalar
-    return tf * (K1 + 1.0) / (
-        tf + K1 * (1.0 - B + B * dl / max(avgdl, 1e-9)))
+class Bm25:
+    """The engine's ranking, and where any ranking enters the kernel.
+
+    ``leaf_scores`` gives every decoded row its leaf score — for BM25
+    idf·impact, the oracle's float64 expression evaluated column-wise.
+    ``conj`` combines an AND/NEAR's two sides and ``phrase`` a phrase's
+    words — for BM25 a plain sum, in the oracle's op order. ``columnar``
+    says the rules are that sum, which ``_eval_vec`` evaluates over
+    whole columns; a ranking with other rules (swishrank.SwishRank)
+    walks every query per doc. OR, prefix and pattern sums, AND NOT,
+    NOT = 1000 and every posdata rule are the same for all rankings."""
+
+    columnar = True
+    needs_structs = False  # leaf scores read tf and dl only
+
+    @staticmethod
+    def leaf_scores(frame, leaves, dfs, stats):
+        """Per-row scores of ``frame`` for ``leaves`` [((field, term),
+        row indices)]; rows of no listed leaf score 0."""
+        import numpy as np
+
+        from ..oracle.engine import bm25_idf
+
+        tf = frame["tf"].to_numpy(dtype=np.float64)
+        dl = frame["dl"].to_numpy(dtype=np.float64)
+        ad = max(stats["avgdl"], 1e-9)
+        impact = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / ad))
+        out = np.zeros(len(frame))
+        for leaf, rows in leaves:
+            df = dfs.get(leaf)
+            idf = 0.0 if df is None else bm25_idf(stats["n_docs"], df)
+            out[rows] = idf * impact[rows]
+        return out
+
+    @staticmethod
+    def conj(node, left, right):
+        return left + right
+
+    @staticmethod
+    def phrase(scores):
+        total = 0.0
+        for s in scores:
+            total += s
+        return total
 
 
-def eval_doc(node, entries, dl, idf, avgdl, expansions):
+BM25 = Bm25()
+
+
+def eval_doc(node, entries, expansions, rank=BM25):
     """Evaluate one query AST against ONE doc's leaf map.
 
-    ``entries``: {(field, term): (tf, positions-or-None)}. Returns
-    (score, posdata) or None — posdata may carry 0 separators from a
-    NEAR series exactly like the oracle's per-doc values. Mirrors
-    OracleIndex._eval case for case; keep the two in sync."""
+    ``entries``: {(field, term): (leaf score, positions-or-None)}.
+    ``rank`` combines AND/NEAR sides and phrase words (``Bm25``).
+    Returns (score, posdata) or None — posdata may carry 0 separators
+    from a NEAR series exactly like the oracle's per-doc values.
+    Mirrors OracleIndex._eval and swishrank._o_eval case for case; keep
+    them in sync."""
     if isinstance(node, Term):
         e = entries.get((node.field, node.term))
         if e is None:
             return None
-        tf, pos = e
-        sc = idf[(node.field, node.term)] * _impact(tf, dl, avgdl)
+        sc, pos = e
         return (sc, list(pos) if pos is not None else [])
     if isinstance(node, (Prefix, Pattern)):
         out = None
@@ -124,8 +173,7 @@ def eval_doc(node, entries, dl, idf, avgdl, expansions):
             e = entries.get((node.field, t))
             if e is None:
                 continue
-            tf, pos = e
-            sc = idf[(node.field, t)] * _impact(tf, dl, avgdl)
+            sc, pos = e
             pl = list(pos) if pos is not None else []
             if out is None:
                 out = (sc, pl)
@@ -148,28 +196,23 @@ def eval_doc(node, entries, dl, idf, avgdl, expansions):
                    for j, (off, _) in enumerate(seq))]
         if not matched:
             return None
-        score = 0.0
         allpos = []
-        for j, (_, term) in enumerate(seq):
-            tf, pos = ent[j]
-            score += idf[(node.field, term)] * _impact(tf, dl, avgdl)
+        for _, pos in ent:
             allpos.extend(int(p) for p in pos)
-        return (score, sorted(allpos))
+        return (rank.phrase([e[0] for e in ent]), sorted(allpos))
     if isinstance(node, And):
-        left = eval_doc(node.left, entries, dl, idf, avgdl, expansions)
+        left = eval_doc(node.left, entries, expansions, rank)
         if left is None:
             return None
-        right = eval_doc(node.right, entries, dl, idf, avgdl,
-                         expansions)
+        right = eval_doc(node.right, entries, expansions, rank)
         if right is None:
             return None
         # concat UNSORTED (CopyPositions l then r) — preserves NEAR
         # series separators for an enclosing NEAR
-        return (left[0] + right[0], left[1] + right[1])
+        return (rank.conj(node, left[0], right[0]), left[1] + right[1])
     if isinstance(node, Or):
-        left = eval_doc(node.left, entries, dl, idf, avgdl, expansions)
-        right = eval_doc(node.right, entries, dl, idf, avgdl,
-                         expansions)
+        left = eval_doc(node.left, entries, expansions, rank)
+        right = eval_doc(node.right, entries, expansions, rank)
         # OR posdata is a PLAIN sorted merge: drop NEAR separators
         if left is not None:
             lflat = sorted(x for x in left[1] if x)
@@ -181,30 +224,28 @@ def eval_doc(node, entries, dl, idf, avgdl, expansions):
             return None
         return (right[0], sorted(x for x in right[1] if x))
     if isinstance(node, AndNot):
-        left = eval_doc(node.left, entries, dl, idf, avgdl, expansions)
+        left = eval_doc(node.left, entries, expansions, rank)
         if left is None:
             return None
-        right = eval_doc(node.right, entries, dl, idf, avgdl,
-                         expansions)
+        right = eval_doc(node.right, entries, expansions, rank)
         return left if right is None else None
     if isinstance(node, Not):
-        child = eval_doc(node.child, entries, dl, idf, avgdl, expansions)
+        child = eval_doc(node.child, entries, expansions, rank)
         return (1000.0, []) if child is None else None
     if isinstance(node, Near):
         from .positional import near_chain
 
-        left = eval_doc(node.left, entries, dl, idf, avgdl, expansions)
+        left = eval_doc(node.left, entries, expansions, rank)
         if left is None:
             return None
-        right = eval_doc(node.right, entries, dl, idf, avgdl,
-                         expansions)
+        right = eval_doc(node.right, entries, expansions, rank)
         if right is None:
             return None
         merged = near_chain([int(p) for p in left[1]],
                             [int(p) for p in right[1]], node.distance)
         if merged is None:
             return None
-        return (left[0] + right[0], merged)
+        return (rank.conj(node, left[0], right[0]), merged)
     raise TypeError(f"unsupported node in batch eval: {node!r}")
 
 
@@ -274,12 +315,13 @@ def _eval_vec(node, cols, n_docs, expansions, np):
     raise TypeError(f"non-vectorizable node in batch eval: {node!r}")
 
 
-def _batch_kernel(batches, asts, idf, avgdl, expansions, k):
-    """Per-partition kernel: numpy column evaluation for the
-    non-positional queries, per-doc DAAT walk (restricted to trigger
-    docs, or every doc for a query holding a unary NOT) for the
-    positional ones; local top-k per query, every match when k is
-    None."""
+def _batch_kernel(batches, asts, dfs, stats, expansions, k, rank=BM25):
+    """Per-partition kernel: every row's leaf score from ``rank``
+    (df per leaf from ``dfs``, corpus figures from ``stats``), then
+    numpy column evaluation for the non-positional queries of a
+    columnar ranking and a per-doc DAAT walk (restricted to trigger
+    docs, or every doc for a query holding a unary NOT) for the rest;
+    local top-k per query, every match when k is None."""
     import numpy as np
     import pandas as pd
 
@@ -289,17 +331,13 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, k):
     df = pd.concat(parts, ignore_index=True)
     if not len(df):
         return
-    vec_asts = [(qid, n) for qid, n in asts if not _is_positional(n)]
-    pos_asts = [(qid, n) for qid, n in asts if _is_positional(n)]
+    vec_asts = [(qid, n) for qid, n in asts
+                if rank.columnar and not _is_positional(n)]
+    walk_asts = [(qid, n) for qid, n in asts
+                 if not rank.columnar or _is_positional(n)]
 
-    # factorize docs and leaves; exact per-row BM25 contribution
     doc_codes, doc_vals = pd.factorize(df["doc_id"])
     n_docs = len(doc_vals)
-    tf = df["tf"].to_numpy(dtype=np.float64)
-    dl = df["dl"].to_numpy(dtype=np.float64)
-    ad = max(avgdl, 1e-9)
-    impact = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / ad))
-
     # group rows by (field, term) leaf without string keys (pandas
     # str concat mangles control-char separators): combine the two
     # factorized code spaces into one integer leaf code
@@ -311,41 +349,40 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, k):
     sk = leaf_code[order]
     starts = np.flatnonzero(np.r_[True, sk[1:] != sk[:-1]])
     ends = np.r_[starts[1:], len(sk)]
-    dc_sorted = doc_codes[order]
-    imp_sorted = impact[order]
-    cols = {}  # (field, term) -> (doc_code[], exact row score[])
-    for s0, e0 in zip(starts, ends):
-        f = f_vals[sk[s0] // nt]
-        t = t_vals[sk[s0] % nt]
-        idfv = idf.get((f, t), 0.0)
-        cols[(f, t)] = (dc_sorted[s0:e0], idfv * imp_sorted[s0:e0])
+    leaves = [((f_vals[sk[s0] // nt], t_vals[sk[s0] % nt]),
+               order[s0:e0]) for s0, e0 in zip(starts, ends)]
+    # presence rows only mark live docs for unary NOT: never scored
+    leaves = [(leaf, rows) for leaf, rows in leaves if leaf != PRESENCE]
+    score = rank.leaf_scores(df, leaves, dfs, stats)
+    # (field, term) -> (doc_code[], exact row score[])
+    cols = {leaf: (doc_codes[rows], score[rows]) for leaf, rows in leaves}
 
     per_query: dict = {qid: [] for qid, _ in asts}
 
     for qid, node in vec_asts:
-        score, present = _eval_vec(node, cols, n_docs, expansions, np)
+        sc_all, present = _eval_vec(node, cols, n_docs, expansions, np)
         sel = np.flatnonzero(present)
         if not len(sel):
             continue
-        sc = score[sel]
+        sc = sc_all[sel]
         ids = doc_vals[sel]
         top = np.lexsort((ids, -sc))[:k]
         per_query[qid] = [(int(ids[i]), float(sc[i])) for i in top]
 
-    if pos_asts:
-        # per-doc walk only over docs holding ≥1 positional-query leaf
-        pos_trigger = {}
-        for qid, node in pos_asts:
+    if walk_asts:
+        # per-doc walk only over docs holding ≥1 of the walked leaves
+        trigger = {}
+        for qid, node in walk_asts:
             for leaf in _query_leaves(node, expansions):
-                pos_trigger.setdefault(leaf, []).append(qid)
+                trigger.setdefault(leaf, []).append(qid)
         # a NOT query can match docs holding none of its leaves
-        every_doc = [qid for qid, node in pos_asts if _has_not(node)]
+        every_doc = [qid for qid, node in walk_asts if _has_not(node)]
         cand = np.full(n_docs, bool(every_doc))
-        for leaf in pos_trigger:
+        for leaf in trigger:
             e = cols.get(leaf)
             if e is not None:
                 cand[e[0]] = True
-        ast_by_id = dict(pos_asts)
+        ast_by_id = dict(walk_asts)
         # candidate rows grouped by doc with one stable argsort, then
         # per-doc slices read from plain column lists (pandas per-group
         # indexing cost several times the evaluation itself)
@@ -356,25 +393,22 @@ def _batch_kernel(batches, asts, idf, avgdl, expansions, k):
                                       True]) if len(at) else [0]
         fields = df["field"].tolist()
         terms = df["term"].tolist()
-        tfs = df["tf"].tolist()
-        dls = df["dl"].tolist()
+        scores = score.tolist()
         poss = df["positions"].tolist()
         doc_list = np.asarray(doc_vals).tolist()
         for s0, e0 in zip(bounds[:-1], bounds[1:]):
             g = at[s0:e0].tolist()
             doc_id = doc_list[at_codes[s0]]
-            entries = {(fields[i], terms[i]): (int(tfs[i]), poss[i])
+            entries = {(fields[i], terms[i]): (scores[i], poss[i])
                        for i in g}
-            dlv = int(dls[g[0]])
             cands = set(every_doc)
             for ekey in entries:
-                cands.update(pos_trigger.get(ekey, ()))
+                cands.update(trigger.get(ekey, ()))
             for qid in cands:
-                r = eval_doc(ast_by_id[qid], entries, dlv, idf, avgdl,
-                             expansions)
+                r = eval_doc(ast_by_id[qid], entries, expansions, rank)
                 if r is not None:
-                    per_query[qid].append((int(doc_id), r[0]))
-        for qid, _ in pos_asts:
+                    per_query[qid].append((int(doc_id), float(r[0])))
+        for qid, _ in walk_asts:
             hits = per_query[qid]
             hits.sort(key=lambda h: (-h[1], h[0]))
             per_query[qid] = hits[:k]
@@ -394,12 +428,13 @@ def _topk_merge(pdf, k):
                             ascending=[False, True]).head(k))
 
 
-def evaluate(engine, asts, k, structure_mask=None, limits=None):
+def evaluate(engine, asts, k, structure_mask=None, limits=None,
+             rank=BM25):
     """Every Spark-side query evaluation: scan, decode and df for the
     union of ``asts`` ([(query_id, parsed AST)]), then
-    ``score_decoded``. Returns a DataFrame (query_id, doc_id, score)
-    holding each query's top-k per doc_id partition (every match when
-    ``k`` is None); callers merge or order it."""
+    ``score_decoded`` under ``rank``. Returns a DataFrame (query_id,
+    doc_id, score) holding each query's top-k per doc_id partition
+    (every match when ``k`` is None); callers merge or order it."""
     from functools import reduce
 
     from pyspark.sql import functions as F
@@ -409,7 +444,8 @@ def evaluate(engine, asts, k, structure_mask=None, limits=None):
     # one AST drives the scan planners itself (required-leaf chunk
     # pruning and allowlist); a union's Or root has no required leaves
     node = reduce(Or, (n for _, n in asts))
-    decoded = engine._decoded(node, structure_mask)
+    decoded = engine._decoded(node, structure_mask,
+                              need_structs=rank.needs_structs)
     dfs = engine._term_stats(node, decoded, structure_mask) \
         if decoded is not None else {}
     # wildcards expand over the scanned vocabulary (sorted == the
@@ -437,31 +473,29 @@ def evaluate(engine, asts, k, structure_mask=None, limits=None):
     if decoded is None:
         return engine.spark.createDataFrame([], BATCH_RESULT_SCHEMA)
     return score_decoded(engine, decoded, asts, dfs, k, limits,
-                         expansions)
+                         expansions, rank)
 
 
 def score_decoded(engine, decoded, asts, dfs, k, limits=None,
-                  expansions=None):
+                  expansions=None, rank=BM25):
     """Score decoded posting rows (the decode kernels' schema) with the
-    batch kernel after one doc_id shuffle. ``dfs``: (field, term) ->
-    df for idf. Property ``limits`` keep only the rows of docs that
-    pass them, before scoring: every operator is pointwise per doc,
-    and for unary NOT (complement over live docs, then the filter) the
-    result is the same."""
-    from ..oracle.engine import bm25_idf
+    batch kernel under ``rank`` after one doc_id shuffle. ``dfs``:
+    (field, term) -> df. Property ``limits`` keep only the rows of docs
+    that pass them, before scoring: every operator is pointwise per
+    doc, and for unary NOT (complement over live docs, then the filter)
+    the result is the same."""
     from .proplimit import limits_cond
 
-    stats = engine.handle.stats
-    idf = {key: bm25_idf(stats["n_docs"], df) for key, df in dfs.items()}
+    stats = dict(engine.handle.stats)
     if limits:
         decoded = decoded.join(
             engine.handle.live_docs()
             .filter(limits_cond(limits, engine.handle.cfg))
             .select("doc_id"), "doc_id", "left_semi")
-    avgdl = stats["avgdl"]
     expansions = expansions or {}
     return decoded.repartition("doc_id").mapInPandas(
-        lambda it: _batch_kernel(it, asts, idf, avgdl, expansions, k),
+        lambda it: _batch_kernel(it, asts, dfs, stats, expansions, k,
+                                 rank),
         schema=BATCH_RESULT_SCHEMA)
 
 

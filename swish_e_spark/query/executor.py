@@ -148,12 +148,14 @@ def _wand_block_kernel(batches, prune: dict, theta: float,
     """
     import numpy as np
 
-    from ..codec.postings import BLOCK_SIZE, unpack_posting_list
+    from ..codec.postings import BLOCK_SIZE, unpack_posting_lists
 
     masks = prune.get("masks")
     for pdf in batches:
-        frames = []
-        for rec in pdf.to_dict("records"):
+        # each chunk's block mask first (None: keep every posting), then
+        # one unpack of the kept chunks and one per-posting keep mask
+        kept_rows, kept_masks = [], []
+        for i, rec in enumerate(pdf.to_dict("records")):
             bmask = None
             if masks is not None:
                 # range-aware plan: the driver precomputed each block's
@@ -204,30 +206,36 @@ def _wand_block_kernel(batches, prune: dict, theta: float,
                         bmask = None
                     elif acc is not None:
                         acc.add(int((~bmask).sum()))
-            doc_ids, tfs, _pos, _st, dls = unpack_posting_list(
-                rec["docs_bin"], rec["tfs_bin"], None, None,
-                rec["dls_bin"])
-            rebase = int(bases.get(int(rec["shard"]), 0)) \
-                if bases else 0
-            if rebase:
-                doc_ids = doc_ids + rebase
-            if bmask is not None:
-                n = len(doc_ids)
+            kept_rows.append(i)
+            kept_masks.append(bmask)
+        if not kept_rows:
+            continue
+        kept = pdf.iloc[kept_rows]
+        doc_ids, tfs, _pos, _st, dls, counts = unpack_posting_lists(
+            kept["docs_bin"], kept["tfs_bin"], None, None,
+            kept["dls_bin"],
+            base=([int(bases.get(int(sh), 0)) for sh in kept["shard"]]
+                  if bases else None))
+        keep = []
+        for bmask, n in zip(kept_masks, counts.tolist()):
+            if bmask is None:
+                keep.append(np.ones(n, dtype=bool))
+            else:
                 sizes = np.full(len(bmask), BLOCK_SIZE, dtype=np.int64)
                 sizes[-1] = n - BLOCK_SIZE * (len(bmask) - 1)
-                keep = np.repeat(bmask, sizes)
-                doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
-                if not len(doc_ids):
-                    continue
-            n = len(doc_ids)
-            frames.append(pd.DataFrame({
-                "field": np.repeat(rec["field"], n),
-                "term": np.repeat(rec["term"], n),
-                "doc_id": doc_ids, "tf": tfs, "dl": dls,
-                "positions": [None] * n, "structs": [None] * n,
-            }))
-        if frames:
-            yield pd.concat(frames, ignore_index=True)
+                keep.append(np.repeat(bmask, sizes))
+        keep = np.concatenate(keep)
+        row_of = np.repeat(np.arange(len(kept)), counts)[keep]
+        doc_ids, tfs, dls = doc_ids[keep], tfs[keep], dls[keep]
+        n = len(doc_ids)
+        if not n:
+            continue
+        yield pd.DataFrame({
+            "field": kept["field"].to_numpy()[row_of],
+            "term": kept["term"].to_numpy()[row_of],
+            "doc_id": doc_ids, "tf": tfs, "dl": dls,
+            "positions": [None] * n, "structs": [None] * n,
+        })
 
 
 def _expand_sorted(terms: list, node) -> list:
@@ -359,15 +367,27 @@ class SparkQueryEngine:
 
     # ---- planning ----
 
-    def _expand_prefix(self, field, prefix):
-        """Expand ``prefix*`` against the terms summary table (sorted
-        word-list scan, /root/reference/src/search.c:1631-1843) →
-        [(bucket, term)], or None past the cap. The terms table is tiny
-        relative to segments, and the result turns an all-bucket scan
-        into exact partition-pruned lookups."""
+    @staticmethod
+    def _wildcard_cond(field, prefix, regex=None):
+        """Terms of ``field`` under ``prefix`` that, for an in-word
+        pattern, also match its anchored ``regex`` (literal-prefix range
+        narrowing + regex post-filter,
+        /root/reference/src/search.c:1662-1728)."""
         from pyspark.sql import functions as F
 
-        key = (field, prefix)
+        cond = (F.col("field") == field) & F.col("term").startswith(prefix)
+        if regex is not None:
+            cond = cond & F.col("term").rlike("^" + regex + "$")
+        return cond
+
+    def _expand_prefix(self, field, prefix, regex=None):
+        """Expand ``prefix*`` (or a pattern: its literal prefix and
+        regex) against the terms summary table (sorted word-list scan,
+        /root/reference/src/search.c:1631-1843) → {bucket: [term]}, or
+        None past ``PREFIX_EXPAND_CAP``. The terms table is tiny
+        relative to segments, and the result turns an all-bucket scan
+        into exact partition-pruned lookups."""
+        key = (field, prefix, regex)
         if key in self._prefix_cache:
             return self._prefix_cache[key]
         result = None
@@ -376,42 +396,9 @@ class SparkQueryEngine:
         except Exception:
             tdf = None  # older index without a terms table
         if tdf is not None:
-            rows = (tdf.filter((F.col("field") == field)
-                               & F.col("term").startswith(prefix))
+            rows = (tdf.filter(self._wildcard_cond(field, prefix, regex))
                     .select("term_bucket", "term").distinct()
                     .limit(self.PREFIX_EXPAND_CAP + 1).collect())
-            if len(rows) <= self.PREFIX_EXPAND_CAP:
-                by_bucket: dict = {}
-                for r in rows:
-                    by_bucket.setdefault(r["term_bucket"], []).append(
-                        r["term"])
-                result = by_bucket
-        self._prefix_cache[key] = result
-        return result
-
-    def _expand_pattern(self, pat):
-        """Expand an in-word wildcard against the terms table: literal-
-        prefix range narrowing + anchored regex post-filter
-        (/root/reference/src/search.c:1662-1728)."""
-        from pyspark.sql import functions as F
-
-        key = ("pattern", pat.field, pat.pattern)
-        if key in self._prefix_cache:
-            return self._prefix_cache[key]
-        result = None
-        try:
-            tdf = self.handle.terms()
-        except Exception:
-            tdf = None
-        if tdf is not None:
-            cond = (F.col("field") == pat.field) \
-                & F.col("term").rlike("^" + pat.regex() + "$")
-            pre = pat.literal_prefix()
-            if pre:
-                cond = cond & F.col("term").startswith(pre)
-            rows = (tdf.filter(cond).select("term_bucket", "term")
-                    .distinct().limit(self.PREFIX_EXPAND_CAP + 1)
-                    .collect())
             if len(rows) <= self.PREFIX_EXPAND_CAP:
                 by_bucket: dict = {}
                 for r in rows:
@@ -434,30 +421,17 @@ class SparkQueryEngine:
         patterns = collect_patterns(node)
         seg = self.handle.segments()
         conds = []
-        for pat in patterns:
-            expanded = self._expand_pattern(pat)
-            if expanded is None:  # too many matches: range + regex scan
-                c = (F.col("field") == pat.field) \
-                    & F.col("term").rlike("^" + pat.regex() + "$")
-                pre = pat.literal_prefix()
-                if pre:
-                    c = c & F.col("term").startswith(pre)
-                conds.append(c)
-            else:
-                conds.extend(
-                    (F.col("term_bucket") == b)
-                    & F.col("term").isin(ts)
-                    & (F.col("field") == pat.field)
-                    for b, ts in expanded.items())
+        wild = [(pat.field, pat.literal_prefix(), pat.regex())
+                for pat in patterns]
+        wild += [(field, prefix, None) for field, prefix in prefixes]
         for field, term in terms:
             conds.append(
                 (F.col("term_bucket") == term_bucket(term, self.n_buckets))
                 & (F.col("term") == term) & (F.col("field") == field))
-        for field, prefix in prefixes:
-            expanded = self._expand_prefix(field, prefix)
+        for field, prefix, regex in wild:
+            expanded = self._expand_prefix(field, prefix, regex)
             if expanded is None:  # too many matches: unpruned range scan
-                conds.append(F.col("term").startswith(prefix)
-                             & (F.col("field") == field))
+                conds.append(self._wildcard_cond(field, prefix, regex))
             else:
                 conds.extend(
                     (F.col("term_bucket") == b)
@@ -625,7 +599,7 @@ class SparkQueryEngine:
         cached like the dictionary."""
         import numpy as np
 
-        from ..codec.postings import unpack_posting_list
+        from ..codec.postings import unpack_posting_lists
         from pyspark.sql import functions as F
 
         cached = self._rare_docs_cache.get((field, term))
@@ -636,18 +610,15 @@ class SparkQueryEngine:
                          == term_bucket(term, self.n_buckets))
                         & (F.col("term") == term)
                         & (F.col("field") == field))
-                .select("shard", "docs_bin", "tfs_bin", "dls_bin")
-                .collect())
-        bases = self.handle.shard_bases
-        parts = []
-        for r in rows:
-            doc_ids, _tf, _p, _s, _dl = unpack_posting_list(
-                r["docs_bin"], r["tfs_bin"], None, None, r["dls_bin"])
-            base = int(bases.get(int(r["shard"]), 0)) if bases else 0
-            parts.append(doc_ids + base)
-        if not parts:
+                .select("shard", "docs_bin").collect())
+        if not rows:
             return None
-        ids = np.sort(np.concatenate(parts))
+        bases = self.handle.shard_bases
+        doc_ids = unpack_posting_lists(
+            [r["docs_bin"] for r in rows],
+            base=([int(bases.get(int(r["shard"]), 0)) for r in rows]
+                  if bases else None))[0]
+        ids = np.sort(doc_ids)
         # bounded like the dictionary cache: a long-lived engine
         # serving many distinct rare leaves must not grow without
         # limit (each entry is up to EXH_ALLOW_MAX_DF int64 ids)
@@ -1147,36 +1118,33 @@ class SparkQueryEngine:
         planner uses them as an exact presence test)."""
         import numpy as np
 
-        from ..codec.postings import unpack_posting_list
+        from ..codec.postings import unpack_posting_lists
 
         if seed_scan is None:
             return 0.0, {}
-        rows = (seed_scan.select("field", "term", "shard", "docs_bin",
-                                 "tfs_bin", "dls_bin").collect())
-        doc_parts, score_parts = [], []
-        exact: dict = {}
-        for r in rows:
-            key = (r["field"], r["term"])
-            idf = idf_by_leaf.get(key)
-            if idf is None:
-                continue
-            doc_ids, tfs, _p, _s, dls = unpack_posting_list(
-                r["docs_bin"], r["tfs_bin"], None, None, r["dls_bin"])
-            base = int(bases.get(int(r["shard"]), 0)) if bases else 0
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            gids = doc_ids + base
-            if key in want_docs:
-                exact.setdefault(key, []).append(gids)
-            doc_parts.append(gids)
-            score_parts.append(idf * (tf * (K1 + 1.0)) / (
-                tf + K1 * (1.0 - B + B * dl / avgdl)))
-        exact_docs = {key: np.sort(np.concatenate(parts))
-                      for key, parts in exact.items()}
-        if not doc_parts:
-            return 0.0, exact_docs
-        docs = np.concatenate(doc_parts)
-        scores = np.concatenate(score_parts)
+        rows = [r for r in seed_scan.select(
+                    "field", "term", "shard", "docs_bin", "tfs_bin",
+                    "dls_bin").collect()
+                if (r["field"], r["term"]) in idf_by_leaf]
+        if not rows:
+            return 0.0, {}
+        docs, tfs, _p, _s, dls, counts = unpack_posting_lists(
+            [r["docs_bin"] for r in rows], [r["tfs_bin"] for r in rows],
+            None, None, [r["dls_bin"] for r in rows],
+            base=([int(bases.get(int(r["shard"]), 0)) for r in rows]
+                  if bases else None))
+        keys = [(r["field"], r["term"]) for r in rows]
+        row_of = np.repeat(np.arange(len(rows)), counts)
+        exact_docs = {}
+        for key in want_docs:
+            sel = [i for i, kk in enumerate(keys) if kk == key]
+            if sel:
+                exact_docs[key] = np.sort(docs[np.isin(row_of, sel)])
+        idf = np.repeat([idf_by_leaf[kk] for kk in keys], counts)
+        tf = tfs.astype(np.float64)
+        dl = dls.astype(np.float64)
+        scores = idf * (tf * (K1 + 1.0)) / (
+            tf + K1 * (1.0 - B + B * dl / avgdl))
         uniq, inv = np.unique(docs, return_inverse=True)
         per_doc = np.zeros(len(uniq))
         np.add.at(per_doc, inv, scores)
@@ -1577,9 +1545,8 @@ class SparkQueryEngine:
         if decoded is not None and len(res.removed):
             decoded = decoded[~np.isin(decoded["doc_id"].to_numpy(),
                                        res.removed)]
-        stats = self.handle.stats
-        idf = {} if decoded is None else {
-            key: bm25_idf(stats["n_docs"], int(df)) for key, df in
+        dfs = {} if decoded is None else {
+            key: int(df) for key, df in
             decoded.groupby(["field", "term"], sort=False).size().items()}
         if _has_not(node):
             # unary NOT: one presence row per live doc, as in
@@ -1590,8 +1557,8 @@ class SparkQueryEngine:
                 "positions": None, "structs": None})], ignore_index=True)
         if decoded is None:
             return []
-        out = next(_batch_kernel([decoded], [("q", node)], idf,
-                                 stats["avgdl"], expansions, k),
+        out = next(_batch_kernel([decoded], [("q", node)], dfs,
+                                 self.handle.stats, expansions, k),
                    None)
         if out is None:
             return []

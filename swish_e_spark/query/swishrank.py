@@ -39,6 +39,16 @@ integer lookup tables (/root/reference/src/rank.c:37-244); this module
 computes the same quantities with float log + round. The committed
 pure-Python oracle below is the normative scorer for rank-identity
 tests; the Spark engine calls the very same scalar functions.
+
+Spark-side evaluator: ``spark_swish_search`` runs the batch pipeline
+every engine query runs (query/batch.py ``evaluate``: one partition-
+pruned scan, one decode with structure bytes, df per leaf, presence
+rows for unary NOT, the property-limit semi-join, one doc_id shuffle
+and the per-partition kernel) under ``SwishRank``. The ranking enters
+at two points only: each row's leaf rank (``scheme0_rank`` /
+``scheme1_rank``) and the AND/NEAR and phrase combination rules above;
+OR/prefix sums, AND-NOT, NOT = 1000 and the posdata rules are the
+kernel's, shared with BM25.
 """
 
 from __future__ import annotations
@@ -383,10 +393,66 @@ def _o_phrase(oidx, node: Phrase, scheme: int):
 
 
 # --------------------------------------------------------------------
-# Spark-side evaluator
+# Spark-side evaluator: the batch kernel under swish ranks
 # --------------------------------------------------------------------
 
-RANKED_SCHEMA = "doc_id long, rank long, positions array<int>"
+class SwishRank:
+    """Schemes 0/1 as a ranking of the batch kernel (query/batch.py):
+    each decoded row's leaf rank comes from ``scheme0_rank`` /
+    ``scheme1_rank`` (the oracle's own scalar functions, over the
+    row's structure bytes, doc length, the leaf's df, the metaname's
+    rank bias and TotalWordPos), and AND/NEAR and phrases combine with
+    swish's integer rules. Every other operator is the kernel's."""
+
+    columnar = False  # the integer rules are not _eval_vec's sum
+    needs_structs = True
+
+    def __init__(self, scheme: int, ignore_total_word_count: bool,
+                 rank_biases: dict):
+        self.scheme = scheme
+        self.ignore_twc = ignore_total_word_count
+        self.biases = rank_biases
+
+    def leaf_scores(self, frame, leaves, dfs, stats):
+        structs = frame["structs"].tolist()
+        dls = frame["dl"].tolist()
+        # TotalWordPos over LIVE docs: Σ(doc_len + extra_pos) net of
+        # tombstones — the reference counts ADDENTRY calls
+        # (index.c:1298), so ExtractPath/link/fan-out/dual-fuzzy
+        # postings count here even though the per-doc word count
+        # (TotalWordsPerFile) excludes them (sw->TotalWordPos,
+        # reference src/rank.c:638-648; same quantity as the oracle's
+        # total_positions)
+        total_positions = stats.get("total_pos", stats["total_len"])
+        out = np.zeros(len(frame), dtype=np.int64)
+        for leaf, rows in leaves:
+            bias = int(self.biases.get(leaf[0], 0))
+            if self.scheme == 0:
+                out[rows] = [scheme0_rank(structs[i], dls[i],
+                                          self.ignore_twc, bias)
+                             for i in rows.tolist()]
+            else:
+                df = dfs.get(leaf, 0)
+                out[rows] = [scheme1_rank(structs[i], dls[i], df,
+                                          stats["n_docs"],
+                                          total_positions, bias)
+                             for i in rows.tolist()]
+        return out
+
+    @staticmethod
+    def conj(node, left, right):
+        # running average weighted by andLevel (reference
+        # src/search.c:1209-1272, 2249-2321)
+        level = _and_level(node.left)
+        return max((left * level + right) // (level + 1), 1)
+
+    @staticmethod
+    def phrase(scores):
+        # pairwise mean chain (reference src/search.c:2561-2637)
+        rank = scores[0]
+        for r in scores[1:]:
+            rank = (rank + r) // 2
+        return max(rank, 1)
 
 
 def spark_swish_search(engine, q: str, k: int = 10, scheme: int = 0,
@@ -395,227 +461,30 @@ def spark_swish_search(engine, q: str, k: int = 10, scheme: int = 0,
                        rank_biases: dict | None = None,
                        structure_mask=None,
                        limits: dict | None = None):
-    """Swish-compatible ranked top-k over the Spark engine's segments.
-    Calls the SAME scalar rank functions as the oracle evaluator; only
-    the execution is distributed. ``rank_biases`` defaults to the
-    index config's persisted per-metaname biases. ``structure_mask``
-    filters positions at decode (-t); ``limits`` property ranges apply
-    before display scaling. Returns [(doc_id, rank)]."""
+    """Swish-compatible ranked top-k over the Spark engine's segments:
+    the batch pipeline of ``search_df`` (one scan, one decode with
+    structures, df, one doc_id shuffle, the per-partition kernel) under
+    ``SwishRank``, which calls the SAME scalar rank functions as the
+    oracle evaluator. ``rank_biases`` defaults to the index config's
+    persisted per-metaname biases. ``structure_mask`` filters
+    positions at decode (-t); ``limits`` property ranges apply before
+    display scaling. Returns [(doc_id, rank)]."""
+    from pyspark.sql import functions as F
+
+    from .batch import evaluate
+
     _check_scheme1_twc(scheme, ignore_total_word_count)
     engine.handle.ensure_current()  # stale caches must error, not lie
     node = parse_query(q, engine.cfg,
                        phrase_delim=getattr(engine, 'phrase_delim', '"'))
-    decoded = engine._decoded(node, structure_mask, need_structs=True)
-    if decoded is None:
-        return []
     if rank_biases is None:
         rank_biases = dict(getattr(engine.handle.cfg, "rank_biases",
                                    ()) or ())
-    decoded = decoded.persist()
-    try:
-        dfs = engine._term_stats(node, decoded, structure_mask)
-        stats = engine.handle.stats
-        # TotalWordPos over LIVE docs: Σ(doc_len + extra_pos) net of
-        # tombstones — the reference counts ADDENTRY calls
-        # (index.c:1298), so ExtractPath/link/fan-out/dual-fuzzy
-        # postings count here even though the per-doc word count
-        # (TotalWordsPerFile) excludes them (sw->TotalWordPos,
-        # /root/reference/src/rank.c:638-648; same quantity as the
-        # oracle's total_positions)
-        total_positions = stats.get("total_pos", stats["total_len"])
-        result = _s_eval(engine, node, decoded, dfs, stats,
-                         total_positions,
-                         (scheme, ignore_total_word_count, rank_biases))
-        from pyspark.sql import functions as F
-
-        if limits:
-            from .proplimit import limits_cond
-
-            docs = engine.handle.live_docs()
-            result = result.join(
-                docs.filter(limits_cond(limits, engine.handle.cfg))
-                .select("doc_id"), "doc_id", "left_semi")
-        rows = (result.select("doc_id", "rank")
-                .orderBy(F.desc("rank"), F.asc("doc_id"))
-                .limit(k).collect())
-        ranked = [(r["doc_id"], r["rank"]) for r in rows]
-        return display_scale(ranked) if scaled else ranked
-    finally:
-        decoded.unpersist()
-
-
-def _s_leaf(engine, decoded, field, term, dfs, stats, total_positions,
-            scheme):
-    # mask is applied at decode time on the Spark path (positions are
-    # already filtered before _s_leaf sees them)
-    scheme, ignore_twc, biases, _mask = _scheme_opts(scheme)
-    bias = int(biases.get(field, 0))
-    from pyspark.sql import functions as F
-
-    df = dfs.get((field, term), 0)
-    if df == 0:
-        return engine.spark.createDataFrame([], RANKED_SCHEMA)
-    n_docs = stats["n_docs"]
-    sub = decoded.filter((F.col("field") == field)
-                         & (F.col("term") == term))
-
-    def rank_kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ranks = []
-            for structs, dl in zip(pdf["structs"], pdf["dl"]):
-                sb = bytes(structs)
-                if scheme == 0:
-                    ranks.append(scheme0_rank(sb, int(dl), ignore_twc,
-                                              bias))
-                else:
-                    ranks.append(scheme1_rank(sb, int(dl), df, n_docs,
-                                              total_positions, bias))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "rank": ranks,
-                                "positions": pdf["positions"]})
-
-    return sub.mapInPandas(rank_kernel, schema=RANKED_SCHEMA)
-
-
-def _s_eval(engine, node, decoded, dfs, stats, total_positions, scheme,
-            _level: int = 1):
-    from pyspark.sql import functions as F
-
-    def rec(n, lvl=1):
-        return _s_eval(engine, n, decoded, dfs, stats, total_positions,
-                       scheme, lvl)
-
-    if isinstance(node, Term):
-        return _s_leaf(engine, decoded, node.field, node.term, dfs,
-                       stats, total_positions, scheme)
-    if isinstance(node, (Prefix, Pattern)):
-        match = _leaf_matcher(node)
-        matching = sorted((f, t) for (f, t) in dfs if match(f, t))
-        if not matching:
-            return engine.spark.createDataFrame([], RANKED_SCHEMA)
-        u = None
-        for f, t in matching:
-            leaf = _s_leaf(engine, decoded, f, t, dfs, stats,
-                           total_positions, scheme)
-            u = leaf if u is None else u.unionByName(leaf)
-        return (u.groupBy("doc_id")
-                .agg(F.sum("rank").alias("rank"),
-                     F.array_sort(F.flatten(F.collect_list("positions")))
-                     .alias("positions")))
-    if isinstance(node, (And, Near)):
-        left = rec(node.left, _level)
-        right = rec(node.right, 1)
-        level = _and_level(node.left)
-        joined = (left.select("doc_id", F.col("rank").alias("rl"),
-                              F.col("positions").alias("pl"))
-                  .join(right.select("doc_id",
-                                     F.col("rank").alias("rr"),
-                                     F.col("positions").alias("pr")),
-                        "doc_id"))
-        if isinstance(node, Near):
-            d = node.distance
-
-            def near_kernel(batches):
-                import pandas as pd
-
-                from .positional import near_batch
-
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
-                    keep, merged = near_batch(pdf["pl"], pdf["pr"], d)
-                    sub = pdf[keep]
-                    if len(sub):
-                        rank = (sub["rl"] * level + sub["rr"]) \
-                            // (level + 1)
-                        yield pd.DataFrame({
-                            "doc_id": sub["doc_id"],
-                            "rank": rank.clip(lower=1),
-                            "positions": merged})
-
-            return joined.mapInPandas(near_kernel, schema=RANKED_SCHEMA)
-        return joined.select(
-            "doc_id",
-            F.greatest((F.col("rl") * level + F.col("rr"))
-                       .cast("long") / F.lit(level + 1),
-                       F.lit(1)).cast("long").alias("rank"),
-            # unsorted concat preserves NEAR series separators
-            # (andresultlists, /root/reference/src/search.c:2300-2304)
-            F.concat(
-                F.coalesce(F.col("pl"), F.array().cast("array<int>")),
-                F.coalesce(F.col("pr"), F.array().cast("array<int>")))
-            .alias("positions"))
-    if isinstance(node, Or):
-        left = rec(node.left)
-        right = rec(node.right)
-        return (left.unionByName(right).groupBy("doc_id")
-                .agg(F.sum("rank").alias("rank"),
-                     F.array_sort(F.array_remove(
-                         F.flatten(F.collect_list("positions")), 0))
-                     .alias("positions")))
-    if isinstance(node, AndNot):
-        left = rec(node.left)
-        right = rec(node.right)
-        return left.join(right.select("doc_id"), "doc_id", "left_anti")
-    if isinstance(node, Not):
-        child = rec(node.child)
-        return (engine.handle.live_docs().select("doc_id")
-                .join(child.select("doc_id"), "doc_id", "left_anti")
-                .select("doc_id", F.lit(1000).cast("long").alias("rank"),
-                        F.lit(None).cast("array<int>")
-                        .alias("positions")))
-    if isinstance(node, Phrase):
-        return _s_phrase(engine, node, decoded, dfs, stats,
-                         total_positions, scheme)
-    raise TypeError(f"unknown node {node!r}")
-
-
-def _s_phrase(engine, node: Phrase, decoded, dfs, stats,
-              total_positions, scheme):
-    from pyspark.sql import functions as F
-
-    seq = [(i, t) for i, t in enumerate(node.terms) if t is not None]
-    leaves = []
-    for j, (off, term) in enumerate(seq):
-        if dfs.get((node.field, term), 0) == 0:
-            return engine.spark.createDataFrame([], RANKED_SCHEMA)
-        leaf = _s_leaf(engine, decoded, node.field, term, dfs, stats,
-                       total_positions, scheme)
-        leaves.append(leaf.select(
-            "doc_id", F.col("rank").alias(f"r{j}"),
-            F.col("positions").alias(f"p{j}")))
-    joined = leaves[0]
-    for nxt in leaves[1:]:
-        joined = joined.join(nxt, "doc_id")
-    offsets = [off for off, _ in seq]
-    nterms = len(seq)
-
-    def check(batches):
-        import numpy as np
-        import pandas as pd
-
-        from .positional import batch_phrase
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            p_lists = [
-                [np.asarray(a, dtype=np.int64) for a in pdf[f"p{j}"]]
-                for j in range(nterms)]
-            ok = batch_phrase(p_lists, offsets)
-            sub = pdf[ok]
-            if len(sub):
-                rank = sub["r0"]
-                for j in range(1, nterms):
-                    rank = (rank + sub[f"r{j}"]) // 2
-                kept = np.flatnonzero(ok)
-                allpos = [
-                    np.sort(np.concatenate(
-                        [p_lists[j][i] for j in range(nterms)]))
-                    .astype("int32") for i in kept]
-                yield pd.DataFrame({"doc_id": sub["doc_id"],
-                                    "rank": rank.clip(lower=1),
-                                    "positions": allpos})
-
-    return joined.mapInPandas(check, schema=RANKED_SCHEMA)
+    rank = SwishRank(scheme, ignore_total_word_count, rank_biases)
+    rows = (evaluate(engine, [("q", node)], k, structure_mask, limits,
+                     rank)
+            .select("doc_id", "score")
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+            .collect())
+    ranked = [(r["doc_id"], int(r["score"])) for r in rows]
+    return display_scale(ranked) if scaled else ranked

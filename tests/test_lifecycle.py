@@ -348,7 +348,8 @@ class TestSwishRank:
     @pytest.mark.parametrize("q", ["pigs", "pigs AND wolf",
                                    '"three little pigs"',
                                    "pigs OR sugar", "meta1=metatest*",
-                                   "little NEAR5 wolf"])
+                                   "little NEAR5 wolf", "NOT pigs",
+                                   "pigs NOT wolf", "p?gs", "pig*"])
     def test_rank_identity(self, q, scheme, engine, oracle300):
         itwc = scheme != 1  # -R 1 demands stored word counts
         got = spark_swish_search(engine, q, k=10, scheme=scheme,
@@ -356,6 +357,49 @@ class TestSwishRank:
         want = oracle_swish_query(oracle300, q, k=10, scheme=scheme,
                                   ignore_total_word_count=itwc)
         assert got == want
+
+    @pytest.mark.parametrize("scheme", [0, 1])
+    def test_rank_identity_after_remove(self, spark, tmp_path_factory,
+                                        corpus300, scheme):
+        """Tombstones change n_docs, TotalWordPos and df: the ranks of
+        an index with removed docs equal the oracle's over the
+        survivors (compared by url; the two number docs differently)."""
+        out = str(tmp_path_factory.mktemp("swishrm"))
+        pages = generate_pages_df(spark, N, partitions=6)
+        build_index(spark, pages, out, IndexConfig(**CFG), n_shards=1)
+        victims = set(sorted(r["url"] for r in corpus300)[::7])
+        # a robots-noindex victim was never indexed
+        assert 0 < remove_documents(spark, out, sorted(victims)) <= \
+            len(victims)
+        eng = SparkQueryEngine(spark, IndexHandle(spark, out))
+        oracle = _oracle_over(
+            [r for r in corpus300 if r["url"] not in victims])
+        itwc = scheme != 1
+        for q in ["pigs", "pigs AND wolf", "pigs OR sugar", "NOT wolf"]:
+            got = spark_swish_search(eng, q, k=10, scheme=scheme,
+                                     ignore_total_word_count=itwc)
+            want = oracle_swish_query(oracle, q, k=10, scheme=scheme,
+                                      ignore_total_word_count=itwc)
+            assert got and [r for _, r in got] == [r for _, r in want]
+            rank_by_url = {
+                oracle.docs[d]["url"]: r
+                for d, r in oracle_swish_query(
+                    oracle, q, k=N, scheme=scheme,
+                    ignore_total_word_count=itwc)}
+            urls = _urls_of(eng, [d for d, _ in got])
+            assert [rank_by_url[u] for u in urls] == [r for _, r in got]
+
+    def test_spark_paths_leave_no_persisted_rdds(self, spark, engine):
+        """A long-lived engine must not pile up cached blocks: the
+        Spark query paths persist nothing they do not release."""
+        persisted = spark.sparkContext._jsc.getPersistentRDDs
+        before = len(persisted())
+        spark_swish_search(engine, '"three little pigs"', k=5)
+        spark_swish_search(engine, "pig* OR NOT wolf", k=5, scheme=1,
+                           ignore_total_word_count=False)
+        engine.search_df("pigs AND wolf", 10, wand="off").collect()
+        engine.match_df("little NEAR5 wolf").collect()
+        assert len(persisted()) <= before
 
     def test_display_scale(self):
         scaled = display_scale([(1, 5000), (2, 4000), (3, 2)])
