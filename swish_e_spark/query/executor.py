@@ -372,7 +372,7 @@ class SparkQueryEngine:
         """Terms of ``field`` under ``prefix`` that, for an in-word
         pattern, also match its anchored ``regex`` (literal-prefix range
         narrowing + regex post-filter,
-        /root/reference/src/search.c:1662-1728)."""
+        reference src/search.c:1662-1728)."""
         from pyspark.sql import functions as F
 
         cond = (F.col("field") == field) & F.col("term").startswith(prefix)
@@ -383,7 +383,7 @@ class SparkQueryEngine:
     def _expand_prefix(self, field, prefix, regex=None):
         """Expand ``prefix*`` (or a pattern: its literal prefix and
         regex) against the terms summary table (sorted word-list scan,
-        /root/reference/src/search.c:1631-1843) → {bucket: [term]}, or
+        reference src/search.c:1631-1843) → {bucket: [term]}, or
         None past ``PREFIX_EXPAND_CAP``. The terms table is tiny
         relative to segments, and the result turns an all-bucket scan
         into exact partition-pruned lookups."""
